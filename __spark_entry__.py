@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``queries()[name]`` at sf=0.01 and compares it against the matching
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+value-hash). ``tests/test_oracle.py`` runs the same comparison for every
+oracle on each tier-1 run.
 
 Implementation lives in ``hbase_observer_es_spark``; this file is only the shim.
 """

@@ -26,8 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Zone ids that are SEMANTICALLY UTC (offset +00:00, no DST): the events-loading
 # guard below must not reject a correctly-configured session just because it
 # spells UTC differently. Genuinely non-UTC zones still fail loudly.

@@ -411,8 +411,6 @@ SELECT doc_id, label, margin, CAST(margin > 0 AS INT) AS pred FROM scored
 """
 
 
-# a NAMED constant (not a computed dict entry) so the registry guards'
-# static root resolution (astdeps.query_roots) can anchor the oracle
 ORACLE_QUALITY_CLASSIFY = sql_margin_replay(
     frozen_model(), f"doc_id % {CLS_HOLDOUT_MOD} = 0"
 )

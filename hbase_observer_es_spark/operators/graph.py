@@ -34,8 +34,8 @@ are prefixed (``c<custkey>`` / ``s<suppkey>``) because the two key spaces
 overlap numerically; INSIDE the fixpoint they are carried as the packed
 int64 ``key·2 + kind-bit`` (bijective for 0 ≤ key < 2^62 — same family as
 the unit-sizing bound below) so every join/aggregation shuffles fixed-width
-longs, and the strings are produced only on the final projection
-(``_edges_with_deg``).
+longs, and the strings are produced only in ``q_graph_pagerank``'s final
+select.
 
 Scale posture (100 TB): each iteration is one join (ranks ⋈ edges on src)
 and one aggregation (sum by dst) — the canonical Pregel-as-DataFrame step.

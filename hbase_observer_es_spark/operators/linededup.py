@@ -52,8 +52,8 @@ Not registry-checked by design: the synthetic ``documents`` fixture table is
 single-line (no ``\\n`` anywhere at any SF), so a registered query would be
 a structurally-trivial pass-through — coverage theater. Instead the tests
 run the operator against multi-line crawl-shaped fixtures AND an equivalent
-DuckDB SQL oracle (the same harness discipline as the registry, minus the
-driver rotation), so the semantics are measured, not just disclosed.
+DuckDB SQL oracle (the same harness discipline as the registry), so the
+semantics are measured, not just disclosed.
 """
 
 from __future__ import annotations

@@ -32,8 +32,7 @@ combine, capped by a loud ``max_entries`` guard (a model too big to
 broadcast should be re-scoped, not silently spilled).
 
 Reference parity: none — builder-brief LLM-pipeline surface (SURVEY
-§2-D); ``q_lm_surprisal`` REGISTERED round 14 (held one driver window
-per the classifier/profile convention).
+§2-D); ``q_lm_surprisal`` is the registered, oracle-checked query.
 """
 
 from __future__ import annotations
@@ -153,7 +152,11 @@ def q_lm_surprisal(spark, sf_dir: str) -> DataFrame:
     export. The production scorer stays :func:`surprisal_frame`
     (frac_bits=16); this twin is the oracle-checkable projection of the
     same plan shape: bigram explode → two broadcast joins → one
-    aggregation, all Catalyst."""
+    aggregation, all Catalyst.
+
+    Building the frame runs ONE eager Spark job: ``uni.count()`` fetches
+    the vocabulary size ``v`` as a driver scalar so it enters the plan as
+    a literal (see the comment at that call)."""
     from ..io import table
 
     # fan_out A/B'd AMBIGUOUS here (r17: phase-split said faster, two gate

@@ -55,11 +55,9 @@ routes a probe to its ``nprobe`` nearest cells and runs ADC only over
 those cells' 8-byte codes — with ``nprobe`` = all cells it equals flat ADC
 exactly (pinned), so the IVF layer provably prunes without rescoring.
 
-Not registry-checked this round (the round-10 verification window is
-full); registration-ready: encode/ADC are SQL-expressible over a
+Registered as ``q_embed_pq``: encode/ADC are SQL-expressible over a
 materialized codebook the same way ``q_sim_ivf_trained`` replays its
-centroids, and the tests already run the pure-model mirror the oracle
-would. Reference parity note: the reference (HbaseDataSyncEsObserver.java)
+centroids, so its oracle replays training in DuckDB. Reference parity note: the reference (HbaseDataSyncEsObserver.java)
 has no vector surface at all — this is LLM-pipeline capability.
 """
 
@@ -641,15 +639,13 @@ def pq_recall(
     )
 
 
-# --- registration-ready query twin + ANSI-SQL oracle -------------------------
+# --- registered query + ANSI-SQL oracle --------------------------------------
 #
 # q_embed_pq is the (spark, sf_dir) form of train→encode over the embeddings
 # table, and SQL_EMBED_PQ is its DuckDB mirror — the same CTE-replay
 # discipline as similarity.SQL_SIM_IVF_TRAINED (the codebook is re-derived
 # inside the oracle, iteration count generated from the same constants, so
-# Spark and SQL cannot drift apart silently). Held OUT of the registry this
-# round (the r10 verification window is full); registering in r11 is one
-# registry row + a rotation re-splice.
+# Spark and SQL cannot drift apart silently).
 
 
 def q_embed_pq(spark, sf_dir: str):

@@ -124,7 +124,7 @@ def pack_training_sequences(
                 # dependent, which breaks the byte-identical rerun contract;
                 # equal ids always co-shard (hash of id), so this in-shard
                 # check is global. Callers with repeats build a composite
-                # id (doc_id, rep_idx) first — see tools/corpus_demo.py.
+                # id first, e.g. (doc_id, rep_idx) from operators/mixture.py.
                 raise ValueError(
                     f"seqpack: duplicate {id_col!r} value {a!r} — stream "
                     "order would depend on input partitioning; make ids "

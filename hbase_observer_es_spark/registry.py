@@ -1,8 +1,9 @@
-"""Central query registry: aggregates QUERIES/ORACLES from every operator module.
+"""Central query registry: aggregates QUERIES/ORACLES from every operator module,
+in ``_MODULES`` order.
 
-``__spark_entry__.py`` (the driver contract) is a thin shim over this. Modules are
-imported lazily-but-eagerly here; a module that fails to import should fail loudly —
-silent partial registries would under-report coverage.
+``__spark_entry__.py`` (the driver contract) is a thin shim over this. A module
+that fails to import fails loudly — a silent partial registry would under-report
+coverage.
 
 Output-shape contract: every registered query must emit SCALAR top-level columns
 only — no ArrayType/MapType/StructType. The external verification harness
@@ -76,250 +77,6 @@ _MODULES = (
     "hbase_observer_es_spark.operators.mixture",
 )
 
-# Registry ORDER is the driver-verification SCHEDULE: external harnesses check a
-# bounded prefix (~50 entries) of the registry per round, so with 180+ registered
-# queries the order below decides which rows in CORRECTNESS_r{N} refresh.
-# GENERATED each round by tools/rotate_priority.py (policy in rotation.py:
-# never-checked > edited-since-green [own fn > file-affected > import-affected]
-# > the age-ordered low-risk band — untouched rows AND rows whose edit is
-# PROVEN AST-unchanged (astdeps.py) interleaved by last-green age, since the
-# proof certifies identical risk; round-9 refinement, see rotation.py).
-# Round 17 inputs: CORRECTNESS_r01-r16 + git round boundaries. Tier 1.0
-# front-loads every query whose own fn the r17 optimization touched (the
-# fan_out call sites, the fixpoint consumers, the search/text spreads),
-# plus an explicit inherited-change supplement (q_text_boilerplate,
-# q_dedup_lsh_recall — they consume dedup._shingled_docs, whose r17
-# spread changes their executed pipeline as much as an own-fn edit; the
-# r16 VERDICT item the supplement answers). Tier 1.1 carries the rest of
-# the edited files oldest-green-first; the io.py/session.py edits put
-# nearly everything in some edited tier, so the order is what allocates
-# the driver's ~50-row window.
-_PRIORITY = (
-    # tier 1.0: own fn edited after last green check
-    "q_lm_surprisal",  # green r15, hbase_observer_es_spark/operators/ngramlm.py fn edited r17 (v-scalar rewrite)
-    "q_join_asof",  # green r11, hbase_observer_es_spark/operators/relational.py fn edited r17
-    "q_agg_group",  # green r11, hbase_observer_es_spark/operators/relational.py fn edited r17
-    "q_search_bm25",  # green r12, hbase_observer_es_spark/operators/search.py fn edited r17
-    "q_decontaminate",  # green r12, hbase_observer_es_spark/operators/pipeline.py fn edited r17
-    "q_search_bm25_ln",  # rows-only r13, hbase_observer_es_spark/operators/search_ln.py fn edited r17
-    "q_search_rescore",  # green r13, hbase_observer_es_spark/operators/rescore.py fn edited r17
-    "q_ann_recall",  # green r14, hbase_observer_es_spark/operators/ann_eval.py fn edited r17
-    "q_sim_triplet_mine",  # green r15, hbase_observer_es_spark/operators/mining.py fn edited r17
-    "q_search_percolate",  # green r15, hbase_observer_es_spark/operators/percolate.py fn edited r17
-    "q_dedup_substring",  # green r15, hbase_observer_es_spark/operators/dedup_substring.py fn edited r17
-    "q_dedup_substring_top",  # green r15, hbase_observer_es_spark/operators/dedup_substring.py fn edited r17
-    "q_sim_ivf_batch",  # green r16, hbase_observer_es_spark/operators/similarity.py fn edited r17
-    "q_sim_lsh",  # green r16, hbase_observer_es_spark/operators/similarity.py fn edited r17
-    "q_sim_lsh_batch",  # green r16, hbase_observer_es_spark/operators/similarity.py fn edited r17
-    "q_text_langid",  # green r16, hbase_observer_es_spark/operators/text.py fn edited r17
-    "q_graph_components",  # green r16, hbase_observer_es_spark/operators/graph.py fn edited r17
-    "q_graph_pagerank",  # green r16, hbase_observer_es_spark/operators/graph.py fn edited r17 s2 (packed node ids)
-    # inherited-change supplement (r17, VERDICT r16 item 4/8): these two
-    # consume dedup._shingled_docs, whose r17 fan_out spread changes their
-    # executed pipeline as much as an own-fn edit would
-    "q_text_boilerplate",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_dedup_lsh_recall",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    # tier 1.1: file edited after last green check (oldest green first)
-    "q_join_star",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_range",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_agg_global",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_agg_distinct",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_agg_approx",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_agg_rollup",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_agg_cube",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_win_rank",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_win_running",  # green r11, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_search_phrase",  # green r12, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_fuzzy",  # green r12, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_mlt",  # green r12, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_sigterms",  # green r12, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_pipeline_corpus",  # green r12, hbase_observer_es_spark/operators/pipeline.py file edited r17
-    "q_sample_stratified",  # green r12, hbase_observer_es_spark/operators/pipeline.py file edited r17
-    "q_mixture_weights",  # green r12, hbase_observer_es_spark/operators/pipeline.py file edited r17
-    "q_text_pack",  # green r12, hbase_observer_es_spark/operators/pipeline.py file edited r17
-    "q_sample_diversified",  # green r12, hbase_observer_es_spark/operators/pipeline.py file edited r17
-    "q_win_lag",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_topk_pergroup",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_sort_limit",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_union",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_intersect",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_except",  # green r12, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_search_suggest",  # green r13, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_highlight",  # green r13, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_bool",  # green r13, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_prefix",  # green r13, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_get_by_key",  # green r13, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_mlt_ln",  # rows-only r13, hbase_observer_es_spark/operators/search_ln.py file edited r17
-    "q_search_phrase_prefix",  # green r14, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_wildcard",  # green r14, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_search_regexp",  # green r14, hbase_observer_es_spark/operators/search.py file edited r17
-    "q_scan_project",  # green r14, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_filter_pred",  # green r14, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_inner",  # green r14, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_broadcast",  # green r15, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_left",  # green r15, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_semi",  # green r15, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_join_anti",  # green r15, hbase_observer_es_spark/operators/relational.py file edited r17
-    "q_text_entropy",  # green r15, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_sim_knn_filtered",  # green r15, hbase_observer_es_spark/operators/mining.py file edited r17
-    "q_sim_knn",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_sim_pairs",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_sim_ivf",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_sim_ivf_trained",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_dedup_embed",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_sim_knn_pudf",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_embed_quant",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_sim_range",  # green r16, hbase_observer_es_spark/operators/similarity.py file edited r17
-    "q_dedup_exact",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_dedup_jaccard",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_dedup_minhash",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_dedup_simhash",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_dedup_simhash_near",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_dedup_clusters",  # green r16, hbase_observer_es_spark/operators/dedup.py file edited r17
-    "q_text_tokens",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_lang",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_quality",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_tokcount",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_fingerprint",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_chunk",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_text_topword",  # green r16, hbase_observer_es_spark/operators/text.py file edited r17
-    "q_graph_copurchase",  # green r16, hbase_observer_es_spark/operators/graph.py file edited r17
-    "q_embed_pq",  # green r16, hbase_observer_es_spark/operators/pq.py file edited r17
-    # tier 1.2: imported helper edited after last green check (oldest green first)
-    "q_agg_geoline",  # green r11, hbase_observer_es_spark/session.py import edited r17
-    "q_scan_pruned",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "s_win_tumbling",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "s_win_sliding",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "s_win_session",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_terms_other",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_range",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_tophits",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_ttest",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_search_terms_set",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_text_gopher",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_text_ngram_rep",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_text_unigram",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_text_pack_sharded",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_incremental_unseen",  # green r12, hbase_observer_es_spark/session.py import edited r17
-    "q_mm_meta",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_mm_framesample",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_pctranks",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_adjacency",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_rare_terms",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_bucket_sel",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_weighted_avg",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_autodatehist",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_str_funcs",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_date_funcs",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_math_case",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_json_extract",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_array_funcs",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_cdc_snapshot",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_cdc_tombstone",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_cell_pivot",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_cdc_doc_merge",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "s_pii_stream",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_join_has_child",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_join_has_parent",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_search_suggest_term",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_search_terms_lookup",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_search_suggest_phrase",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_search_range_relation",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_profile_stats",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_profile_topvals",  # green r13, hbase_observer_es_spark/session.py import edited r17
-    "q_join_bucketed",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_udf_scalar",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_udf_grouped",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_groupingsets",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_percentile",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_pct_sketch",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_datehist",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_composite",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_filters",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_subquery_scalar",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_win_rangeframe",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_page_keyset",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_histogram",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_stats",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_multiterms",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_stringstats",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_matrixstats",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_geocentroid",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_bucketstats",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_scripted",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_sampler",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_normalize",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_bucket_script",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_geobounds",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_topmetrics",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_serialdiff",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_cumcard",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_pctbucket",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_boxplot",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_mad",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_search_querystring",  # green r14, hbase_observer_es_spark/session.py import edited r17
-    "q_join_salted",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_mm_decode",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_mm_resize",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_pipeline",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_rate",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_daterange",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_movfn",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_bucketsort",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_derivative",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_varwidth",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_agg_itemsets",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_collapse",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_function_score",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_rank_feature",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_text_pii",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_dismax",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_boosting",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_pinned",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_multimatch",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_search_hybrid_rrf",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_cdc_field_missing",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_split_assign",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_win_firstlast",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_html_extract",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_corpus_drift",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_corpus_drift_tv",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_mix_select",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "q_mix_realize",  # green r15, hbase_observer_es_spark/session.py import edited r17
-    "s_watermark_dedup",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_upsert_sink",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_stateful_profile",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_win_stream",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_session_stream",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_join_stream",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "s_terms_stream",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_nested_exists",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_geo_bbox",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_geo_grid",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_geo_distance",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_geo_shape_relation",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_geo_polygon",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_search_span_near",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_search_intervals",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_search_span_or",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_search_span_first",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_win_ntile",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_pivot",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    "q_quality_classify",  # green r16, hbase_observer_es_spark/session.py import edited r17
-    # tier 2.0: age-ordered low-risk band: untouched, or edit with closure proven AST-unchanged (oldest green first)
-    "q_zorder_cells",  # green r12
-)
-
-
-def _reorder(queries: dict, oracles: dict) -> tuple[dict, dict]:
-    unknown = [n for n in _PRIORITY if n not in queries]
-    if unknown:
-        raise ValueError(f"_PRIORITY names not in registry: {unknown}")
-    ordered = list(_PRIORITY) + [n for n in queries if n not in set(_PRIORITY)]
-    q = {n: queries[n] for n in ordered}
-    o = {n: oracles[n] for n in ordered if n in oracles}
-    return q, o
-
 
 def _load() -> tuple[dict[str, QueryFn], dict[str, str]]:
     import importlib
@@ -336,7 +93,7 @@ def _load() -> tuple[dict[str, QueryFn], dict[str, str]]:
     unknown = set(oracles) - set(queries)
     if unknown:
         raise ValueError(f"oracle without query: {sorted(unknown)}")
-    return _reorder(queries, oracles)
+    return queries, oracles
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -43,12 +43,12 @@ def s_pii_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the PII audit over a real document stream (micro-batch replay of
     the corpus), complete output mode; equals batch q_text_pii when drained."""
     run = f"s_pii_stream_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     d = table(spark, sf_dir, "documents")
     stream_dir = stage_cached(
         d,
         "docs-" + source_fingerprint(sf_dir, "documents"),
-        out,
+        run_dir,
         N_BATCHES,
         order_col="doc_id",  # documents carry no timestamp; id order is the arrival order
     )
@@ -60,13 +60,13 @@ def s_pii_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         audit.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     _record_stream_plan("s_pii_stream", q)
-    return _drain_memory_sink(sub, qname, sub.table(qname))
+    return _drain_memory_sink(sub, qname, sub.table(qname), run_dir)
 
 
 # drained stream == the batch scrub; the oracle is the SAME audit SQL

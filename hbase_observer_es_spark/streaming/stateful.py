@@ -30,7 +30,9 @@ from __future__ import annotations
 import datetime
 import glob
 import os
+import shutil
 import uuid
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -55,27 +57,27 @@ N_BATCHES = 2
 STATE_PARTITIONS = 8
 
 
-# When set to a dict (tools/plan_audit.py), every true-stream query records
-# the EXECUTED plan of its final micro-batch here (query.lastExecution via
-# explainInternal) right after termination — the streaming half of the
-# registry-wide plan inventory. None (the default) = zero overhead.
+# When set to a dict (tests/test_streaming_isolation.py), every true-stream
+# query records the EXECUTED plan of its final micro-batch here
+# (query.lastExecution via explainInternal) right after termination.
+# None (the default) = zero overhead.
 LAST_PLANS: dict[str, str] | None = None
 
 
 def _record_stream_plan(name: str, q) -> None:
-    """Stash the terminated query's last micro-batch executed plan for the
-    plan audit. Capture must never fail the query itself."""
+    """Stash the terminated query's last micro-batch executed plan in
+    LAST_PLANS. Capture must never fail the query itself."""
     if LAST_PLANS is None:
         return
     try:
         LAST_PLANS[name] = q._jsq.explainInternal(True)
-    except Exception as e:  # noqa: BLE001 - audit artifact records the failure
+    except Exception as e:  # noqa: BLE001 - the capture records the failure
         LAST_PLANS[name] = f"<capture failed: {type(e).__name__}: {e}>"
 
 
 # Isolated clones are POOLED per (SparkContext, conf-signature): repeated
-# streaming-query invocations in one driver (the sweep harness runs all 11
-# queries three configs deep) must not accumulate a fresh SessionState each
+# streaming-query invocations in one driver (a test session runs each
+# query many times) must not accumulate a fresh SessionState each
 # call. The pool is bounded by the number of distinct signatures (3 today).
 _SESSION_POOL: dict[tuple, SparkSession] = {}
 
@@ -116,16 +118,22 @@ def _streaming_session(
     return sub
 
 
-def _drain_memory_sink(sub: SparkSession, qname: str, df: DataFrame) -> DataFrame:
+def _drain_memory_sink(
+    sub: SparkSession, qname: str, df: DataFrame, run_dir: str
+) -> DataFrame:
     """Materialize a memory-sink query's FINAL result and unpin the sink
     table: an eager localCheckpoint copies the (result-sized) rows into
     block storage whose lifetime is the RETURNED frame's, after which the
     temp view is dropped — nothing stays pinned in the pooled clone's
     catalog between invocations. Without this, every run would leave its
     full result table reachable only through that run's return value while
-    the catalog reference kept it alive for the driver's lifetime."""
+    the catalog reference kept it alive for the driver's lifetime.
+
+    The query has terminated and the copy no longer reads its run
+    directory (staged input + checkpoint), so that is removed too."""
     out = df.localCheckpoint(eager=True)
     sub.catalog.dropTempView(qname)
+    shutil.rmtree(run_dir)
     return out
 
 
@@ -145,10 +153,10 @@ def s_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink and the copy disappears with the memory sink itself.
     """
     run = f"s_watermark_dedup_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
     doubled = e.unionByName(e)
-    stream_dir = stage_cached(doubled, "2x-" + source_fingerprint(sf_dir, "events"), out, N_BATCHES)
+    stream_dir = stage_cached(doubled, "2x-" + source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
     # no-data batch off (r16): streaming dropDuplicates EMITS each kept row in
     # the micro-batch it arrives in (append semantics); the trailing no-data
@@ -163,7 +171,7 @@ def s_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -172,7 +180,7 @@ def s_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = sub.table(qname).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    return _drain_memory_sink(sub, qname, out)
+    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_WATERMARK_DEDUP = """
@@ -185,22 +193,27 @@ def s_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch LWW merge with tombstones into a keyed parquet sink. Final state
     must equal the batch q_cdc_tombstone snapshot (same oracle)."""
     run = f"s_upsert_sink_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     mut = mutations(spark, sf_dir)
-    stream_dir = stage_cached(mut, "mut-" + source_fingerprint(sf_dir, "events"), out, N_BATCHES)
+    stream_dir = stage_cached(mut, "mut-" + source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
-    sink = KeyedParquetSink(out)
+    sink = KeyedParquetSink(run_dir)
     sub = _streaming_session(spark)
     stream = read_stream(sub, stream_dir, mut.schema)
     q = (
         stream.writeStream.foreachBatch(sink.merge_batch)
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     _record_stream_plan("s_upsert_sink", q)
-    return sink.read(spark).select("row_key", "qualifier", "value", "ts")
+    out = sink.read(spark).select("row_key", "qualifier", "value", "ts")
+    # the lazy read scans the index files under run_dir, so the directory
+    # lives exactly as long as the returned frame object: keep that object
+    # referenced while any frame derived from it is evaluated
+    weakref.finalize(out, shutil.rmtree, run_dir, ignore_errors=True)
+    return out
 
 
 # the streaming sink must converge to exactly the batch tombstone snapshot
@@ -285,9 +298,9 @@ def s_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     run = f"s_stateful_profile_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), out, N_BATCHES)
+    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
     # no-data batch off: see docstring — NoTimeout => pure overhead
     sub = _streaming_session(spark, PROFILE_STATE_PARTITIONS, nodata=False)
@@ -304,7 +317,7 @@ def s_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiled.writeStream.format("memory")
         .queryName(qname)
         .outputMode("update")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -317,7 +330,7 @@ def s_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("user_id", "n_events", "vmin", "vmax", "last_ts")
     )
-    return _drain_memory_sink(sub, qname, out)
+    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_STATEFUL_PROFILE = """
@@ -397,9 +410,9 @@ def s_win_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import dsum
 
     run = f"s_win_stream_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
-    stream_dir = _stage_with_sentinel(e, sf_dir, out)
+    stream_dir = _stage_with_sentinel(e, sf_dir, run_dir)
 
     sub = _streaming_session(spark)
     stream = read_stream(sub, stream_dir, e.schema)
@@ -420,14 +433,14 @@ def s_win_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     _record_stream_plan("s_win_stream", q)
     out = sub.table(qname).filter(F.col("event_type") != "sentinel")
-    return _drain_memory_sink(sub, qname, out)
+    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 # append-mode stream must converge to exactly the batch tumbling-window result
@@ -451,9 +464,9 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import dsum
 
     run = f"s_session_stream_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
-    stream_dir = _stage_with_sentinel(e, sf_dir, out)
+    stream_dir = _stage_with_sentinel(e, sf_dir, run_dir)
 
     sub = _streaming_session(spark)
     stream = read_stream(sub, stream_dir, e.schema)
@@ -474,14 +487,14 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     _record_stream_plan("s_session_stream", q)
     out = sub.table(qname).filter(F.col("user_id") != -1)
-    return _drain_memory_sink(sub, qname, out)
+    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 from .windows import SQL_WIN_SESSION as SQL_SESSION_STREAM  # noqa: E402
@@ -512,9 +525,9 @@ def s_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribute no inner-join output rows.
     """
     run = f"s_join_stream_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), out, N_BATCHES)
+    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
     # no-data batch off: see docstring — inner join emits on arrival
     sub = _streaming_session(spark, nodata=False)
@@ -545,13 +558,13 @@ def s_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.writeStream.format("memory")
         .queryName(qname)
         .outputMode("append")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
     _record_stream_plan("s_join_stream", q)
-    return _drain_memory_sink(sub, qname, sub.table(qname))
+    return _drain_memory_sink(sub, qname, sub.table(qname), run_dir)
 
 
 from ..operators.relational import SQL_JOIN_RANGE as SQL_JOIN_STREAM  # noqa: E402
@@ -577,9 +590,9 @@ def s_terms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import dsum
 
     run = f"s_terms_stream_{uuid.uuid4().hex[:8]}"
-    out = scratch_dir(run)
+    run_dir = scratch_dir(run)
     e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), out, N_BATCHES)
+    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
     sub = _streaming_session(spark)
     stream = read_stream(sub, stream_dir, e.schema)
@@ -591,7 +604,7 @@ def s_terms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.writeStream.format("memory")
         .queryName(qname)
         .outputMode("complete")
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
+        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -602,7 +615,7 @@ def s_terms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_events"), F.asc("event_type"))
         .limit(TERMS_STREAM_N)
     )
-    return _drain_memory_sink(sub, qname, out)
+    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_TERMS_STREAM = f"""

@@ -46,18 +46,3 @@ def test_from_attrs_roundtrip():
 def test_from_attrs_missing_key():
     with pytest.raises(KeyError):
         SyncConfig.from_attrs({"indexName": "x"})
-
-
-def test_registry_priority_order():
-    """Registry order IS the driver-verification schedule: the priority list
-    leads (never-green, changed-this-round, stale-r1), every name resolves, and
-    no duplicates entered via the module dicts."""
-    from hbase_observer_es_spark.registry import _PRIORITY, all_oracles, all_queries
-
-    qs = list(all_queries())
-    assert qs[: len(_PRIORITY)] == list(_PRIORITY)
-    assert len(set(qs)) == len(qs)
-    # oracle dict preserves the same order for the names it covers
-    os_ = list(all_oracles())
-    pos = {n: i for i, n in enumerate(qs)}
-    assert os_ == sorted(os_, key=lambda n: pos[n])

@@ -1080,77 +1080,47 @@ def test_registry_wide_plan_hygiene(spark):
 def test_quadratic_jaccard_ground_truth_is_fenced():
     """q_dedup_jaccard is the DOCUMENTED quadratic ground-truth baseline for
     the LSH path (all-pairs non-equi self-join — BroadcastNestedLoopJoin at
-    any corpus size). This fence makes the 'never a production path' claim
-    mechanical: no other registered query's reachable definition closure may
-    include the jaccard query or its all-pairs building blocks, so the
-    cartesian baseline can never leak into a scale path unnoticed."""
-    import os
+    any corpus size), and q_dedup_lsh_recall's truth side is the same kind
+    of baseline. This fence makes the 'never a production path' claim
+    mechanical: the all-pairs building blocks are private, and no top-level
+    def in the package other than their one query names them, nor does any
+    module import them — so the cartesian baseline cannot leak into a
+    scale path unnoticed."""
+    import ast
+    from pathlib import Path
 
-    from hbase_observer_es_spark.astdeps import DepGraph, query_roots
-    from hbase_observer_es_spark.registry import _MODULES
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg_dir = os.path.join(repo, "hbase_observer_es_spark")
-    sources: dict[str, str] = {}
-    for root, _, fnames in os.walk(pkg_dir):
-        for f in fnames:
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                with open(p) as fh:
-                    sources[os.path.relpath(p, repo)] = fh.read()
-
-    def resolve(parts):
-        if not parts or parts[0] != "hbase_observer_es_spark":
-            return None
-        base = "/".join(parts)
-        for rel in (base + ".py", base + "/__init__.py"):
-            if rel in sources:
-                return rel
-        return None
-
-    graph = DepGraph(sources, resolve)
-    dedup_rel = "hbase_observer_es_spark/operators/dedup.py"
-    eval_rel = "hbase_observer_es_spark/operators/dedup_eval.py"
-    forbidden = {
-        (dedup_rel, n)
-        for n in ("q_dedup_jaccard", "_pair_frames", "_bitset_pair_jaccard")
+    pkg = Path(__file__).resolve().parents[1] / "hbase_observer_es_spark"
+    # fenced name -> (its home module, the top-level defs allowed to name it)
+    fenced = {
+        "_pair_frames": ("operators/dedup.py", {"q_dedup_jaccard"}),
+        "_bitset_pair_jaccard": ("operators/dedup.py", {"q_dedup_jaccard"}),
+        "_truth_pairs": ("operators/dedup_eval.py", {"q_dedup_lsh_recall"}),
     }
-    # q_dedup_lsh_recall's all-pairs truth side is a fenced baseline too:
-    # it may appear ONLY in its own closure (skipped below, like jaccard)
-    forbidden |= {(eval_rel, "_truth_pairs"), (eval_rel, "q_dedup_lsh_recall")}
-
-    checked = 0
-    for modname in _MODULES:
-        rel = modname.replace(".", "/") + ".py"
-        assert rel in sources, rel
-        import ast as _ast
-
-        tree = _ast.parse(sources[rel])
-        qnames = []
-        for node in tree.body:
-            if (
-                isinstance(node, _ast.Assign)
-                and any(
-                    isinstance(t, _ast.Name) and t.id == "QUERIES"
-                    for t in node.targets
-                )
-                and isinstance(node.value, _ast.Dict)
-            ):
-                qnames = [
-                    k.value
-                    for k in node.value.keys
-                    if isinstance(k, _ast.Constant)
-                ]
-        for qname in qnames:
-            if qname in ("q_dedup_jaccard", "q_dedup_lsh_recall"):
-                continue
-            roots = query_roots(sources[rel], qname)
-            assert roots is not None, f"{qname}: registry roots unresolvable"
-            c = graph.closure(rel, {n for _role, n in roots})
-            hit = forbidden & c.reached
-            assert not hit, f"{qname} reaches quadratic baseline defs: {hit}"
-            checked += 1
-    assert checked > 150, f"fence walked only {checked} queries"
+    allowed, leaks = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", f"<module line {top.lineno}>")
+            for node in ast.walk(top):
+                if isinstance(node, (ast.Import, ast.ImportFrom)):
+                    named = {a.name.rsplit(".", 1)[-1] for a in node.names}
+                elif isinstance(node, ast.Name):
+                    named = {node.id}
+                elif isinstance(node, ast.Attribute):
+                    named = {node.attr}
+                elif isinstance(node, ast.Constant):  # getattr(mod, "...")
+                    named = {node.value}
+                else:
+                    continue
+                for name in named & fenced.keys():
+                    home, defs = fenced[name]
+                    ok = rel == home and owner in defs | {name}
+                    (allowed if ok else leaks).add((rel, owner, name))
+    assert not leaks, f"quadratic baseline helpers named outside their query: {leaks}"
+    # the fence is live: each helper is still used by its own query
+    assert {(n, o) for _, o, n in allowed} >= {
+        (n, o) for n, (_, defs) in fenced.items() for o in defs
+    }, allowed
 
 
 def test_has_parent_child_side_never_shuffles(spark):

@@ -152,3 +152,31 @@ def test_streaming_plan_facts_rejects_capture_sentinel():
 
     with pytest.raises(ValueError, match="physical section"):
         streaming_plan_facts("<capture failed: AttributeError: boom>")
+
+
+def test_streaming_runs_leave_no_run_directories(spark):
+    """Each stream query's ``.scratch/<query>_<uuid>`` run directory (staged
+    input + checkpoint) goes with its result: a memory-sink query removes it
+    once drained, and s_upsert_sink's lazy index read keeps it exactly as
+    long as the returned frame object lives."""
+    import gc
+
+    from hbase_observer_es_spark.sources.filestream import SCRATCH
+    from hbase_observer_es_spark.streaming.stateful import (
+        s_terms_stream,
+        s_upsert_sink,
+    )
+
+    def runs():
+        return {p.name for p in SCRATCH.glob("s_*")}
+
+    before = runs()
+    terms = s_terms_stream(spark, SF_SMOKE)
+    upsert = s_upsert_sink(spark, SF_SMOKE)
+    n_terms, n_upsert = len(terms.collect()), len(upsert.collect())
+    assert n_terms > 0 and n_upsert > 0
+    left = runs() - before
+    assert len(left) == 1 and left.pop().startswith("s_upsert_sink_")
+    del terms, upsert
+    gc.collect()
+    assert runs() - before == set()
