@@ -83,21 +83,53 @@ def latest_cell_state(mut: DataFrame) -> DataFrame:
     )
 
 
+def resolve_cells(
+    mut: DataFrame, keep_deletes: str = "false", seq: str | None = None
+) -> DataFrame:
+    """LWW + tombstone resolution of a mutation log, as one hash exchange on
+    ``row_key`` feeding two windows (no join): the key's latest delete ts, then
+    the rank of each surviving cell version per ``(row_key, op, qualifier)``,
+    ts then value descending. An upsert survives only if it is NEWER than the
+    key's latest delete (delete wins ties).
+
+    ``seq`` names an arrival-order column (a micro-batch number): a delete then
+    hides only upserts of its own or an earlier ``seq``, so an old upsert
+    arriving after a delete re-creates the doc — the arrival-order semantics of
+    the reference (HbaseDataSyncEsObserver.java:101-104). Where the SQL
+    predicate ``keep_deletes`` holds, each key's latest delete is kept as an
+    ``op='delete'`` row, so the output can be resolved again together with
+    later mutations. Columns: row_key, qualifier, value, ts, op.
+
+    One SQL statement, so the plan is analysed once: each DataFrame call
+    re-analyses the plan so far, and this runs on every sink commit and read."""
+    frame = (
+        f"ORDER BY {seq} DESC RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+        if seq else ""
+    )
+    return mut.sparkSession.sql(
+        f"""
+        SELECT row_key, qualifier, value, ts, op FROM (
+            SELECT *, row_number() OVER (PARTITION BY row_key, op, qualifier
+                                         ORDER BY ts DESC, value DESC) AS rn
+            FROM (
+                SELECT *, max(IF(op = 'delete', ts, NULL))
+                              OVER (PARTITION BY row_key {frame}) AS del_ts
+                FROM {{mut}}
+            )
+            WHERE op = 'upsert' AND (del_ts IS NULL OR ts > del_ts)
+               OR op = 'delete' AND ({keep_deletes})
+        )
+        WHERE rn = 1
+        """,
+        mut=mut,
+    )
+
+
 def apply_tombstones(mut: DataFrame) -> DataFrame:
     """A8: whole-document tombstones. A qualifier value survives only if its latest
     upsert is NEWER than the key's latest delete; an upsert after the delete
     re-creates the doc (ES delete-then-index semantics)."""
-    live = latest_cell_state(mut)
-    last_del = (
-        mut.filter(F.col("op") == "delete")
-        .groupBy("row_key")
-        .agg(F.max("ts").alias("del_ts"))
-    )
-    return (
-        live.join(last_del, "row_key", "left")
-        .filter(F.col("del_ts").isNull() | (F.col("ts") > F.col("del_ts")))
-        .select("row_key", "qualifier", "value", "ts")
-    )
+    return resolve_cells(mut).drop("op")
 
 
 def pivot_cells(mut: DataFrame, qualifiers: tuple[str, ...] = QUALIFIERS) -> DataFrame:

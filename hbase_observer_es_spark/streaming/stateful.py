@@ -13,15 +13,18 @@ Reference semantics being reproduced (file:line into /root/reference):
   (the reference can lose ≤10 s/≤10 k buffered docs on crash — heap-only buffer,
   ElasticsearchBulkOperator.java:45).
 * upsert/delete application per key (HbaseDataSyncEsObserver.java:85-89,:101-104)
-  → foreachBatch merge using the same apply_tombstones operator as the batch path,
-  so stream state == batch snapshot by construction (verified by the oracle).
+  → foreachBatch merge using the same resolver as the batch path's
+  apply_tombstones (cdc.resolve_cells), so stream state == batch snapshot by
+  construction (verified by the oracle).
 
 Deletes are applied against state as of their batch (arrival order) — exactly the
 reference's semantics, where an old upsert arriving after a delete re-creates the doc.
 
-Scale: foreachBatch merge is a keyed join per micro-batch; state lives in a keyed
-parquet table (Delta/Iceberg MERGE INTO in production — same plan shape). No driver
-state, no global lock — the partition parallelism the reference's single
+Scale: the foreachBatch merge appends one run per key partition to a
+merge-on-read keyed parquet table (sinks/keyed_parquet.py), resolved by one hash
+exchange on the row key feeding two windows — no join; a few partitions per batch
+fold their runs into a new base (Delta/Hudi merge-on-read in production). No
+driver state, no global lock — the partition parallelism the reference's single
 ReentrantLock buffer (ElasticsearchBulkOperator.java:47) cannot have.
 """
 

@@ -1186,3 +1186,59 @@ def test_range_relation_is_map_only_pushed_scan(spark):
     f = facts_of(spark, "q_search_range_relation")
     assert f.exchanges == 0 and "Join" not in plan, plan
     assert re.search(r"PushedFilters: \[[^\]]*o_orderdate", plan), plan
+
+
+def test_apply_tombstones_one_exchange_no_join(spark):
+    """The CDC resolver is one hash exchange on row_key feeding two windows
+    (latest delete per key, rank per cell): no join against a separate
+    per-key delete aggregate."""
+    from hbase_observer_es_spark.operators.cdc import apply_tombstones, mutations
+
+    plan = plan_string(apply_tombstones(mutations(spark, SF_ORACLE)))
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(row_key" in plan, plan
+    assert "Join" not in plan, plan
+    assert "WindowGroupLimit" in plan, plan
+
+
+def test_delta_merge_runs_no_collect_job(spark):
+    """A delta merge_batch learns which partitions got a run by listing its
+    output directory: none of its jobs is a driver-side collect."""
+    import datetime as dt
+
+    from hbase_observer_es_spark.sinks.keyed_parquet import KeyedParquetSink
+    from hbase_observer_es_spark.sources.filestream import scratch_dir
+
+    schema = "row_key string, qualifier string, value string, ts timestamp, op string"
+    t = dt.datetime(2024, 1, 1)
+    sink = KeyedParquetSink(scratch_dir("plan_delta_merge_jobs"), n_partitions=4)
+    sink.merge_batch(spark.createDataFrame(
+        [(f"k{i}", "q", str(i), t, "upsert") for i in range(20)], schema), 0)
+    delta = spark.createDataFrame([("k3", "q", "new", t + dt.timedelta(1), "upsert"),
+                                   ("k5", None, None, t + dt.timedelta(1), "delete")],
+                                  schema)
+    sc = spark.sparkContext
+    sc.setJobGroup("delta_merge_jobs", "delta merge_batch")
+    try:
+        sink.merge_batch(delta, 1)
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("delta_merge_jobs")
+    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    names = [s.name for s in stages if s is not None]
+    assert jobs and names, (jobs, names)
+    assert not any(n.startswith("collect") for n in names), names
+
+
+def test_empty_index_read_is_jvm_only(spark):
+    """Reading an index with no runs yet builds no Python RDD: an empty
+    ``createDataFrame`` would start the Python worker daemon."""
+    from hbase_observer_es_spark.sinks.keyed_parquet import KeyedParquetSink
+    from hbase_observer_es_spark.sources.filestream import scratch_dir
+
+    df = KeyedParquetSink(scratch_dir("plan_empty_index")).read(spark)
+    plan = plan_string(df)
+    assert "ExistingRDD" not in plan, plan
+    assert df.columns == ["row_key", "qualifier", "value", "ts"]
+    assert df.dtypes[-1] == ("ts", "timestamp") and df.count() == 0
