@@ -4,7 +4,7 @@ The fourth real codec, and the first MULTI-FRAME one: an animated GIF is
 real frame-sampled media, so the multimodal family's frame-sampling
 story runs on an actual container format instead of a synthetic one.
 Same from-spec discipline as PNG/JPEG/WAV (``operators/png.py``,
-``operators/jpeg.py``, ``operators/wav.py``): no codec library, loud
+``operators/jpeg.py``, ``attic/operators/wav.py``): no codec library, loud
 failures with ``origin`` context. Implemented:
 
 * header + logical screen descriptor, global/local color tables;

@@ -5,8 +5,8 @@ column: split the hash into ``n_bands`` bands of ``band_bits`` bits, bucket-
 join per band, verify candidates with the true hamming distance. Pigeonhole
 makes banding EXACT for hamming ≤ n_bands − 1: a pair differing in fewer
 bits than there are bands agrees on at least one full band. Image hashes
-(``operators/imagehash.py``), audio energy fingerprints
-(``operators/audiohash.py``), and the registered SimHash near-dup join
+(``attic/operators/imagehash.py``), audio energy fingerprints
+(``attic/operators/audiohash.py``), and the registered SimHash near-dup join
 (``dedup.q_dedup_simhash_near``, 4 × 15-bit bands over 60-bit
 fingerprints) all delegate here — the min-label-fixpoint consolidation
 rule applied before a second copy could drift. Fix banding bugs HERE;

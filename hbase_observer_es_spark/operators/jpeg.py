@@ -1,7 +1,7 @@
 """JPEG decode from the public specification (ITU-T T.81), stdlib-only.
 
 The third real codec (after PNG — ``operators/png.py`` — and WAV —
-``operators/wav.py``), closing the most common web-image format with the
+``attic/operators/wav.py``), closing the most common web-image format with the
 same from-spec discipline: no codec library, every byte handled per the
 published standard, corruption dies loudly with ``origin`` context.
 Implemented subset — baseline sequential DCT (SOF0/SOF1) AND progressive
@@ -47,7 +47,7 @@ full precision through dequantization and the IDCT, then renders to the
 
 Output is a :class:`~.png.PngImage` (8-bit gray or RGB, interlace-free
 raw scanlines), so the entire downstream pixel stack — ``resize_nearest``,
-``encode_png``, the perceptual hashes in ``operators/imagehash.py`` —
+``encode_png``, the perceptual hashes in ``attic/operators/imagehash.py`` —
 works on JPEG payloads unchanged.
 
 Scale posture: like PNG, decode runs inside the multimodal mapInPandas

@@ -68,8 +68,8 @@ def _decode_real(payload: bytes) -> tuple:
     head = bytes(payload[:12])
     if head[:4] == b"RIFF" and head[8:12] == b"WAVE":
         raise NotImplementedError(
-            "image decoding for riff/wave AUDIO (route it to "
-            "operators/wav.py, not the image decoder)"
+            "image decoding for riff/wave AUDIO (an audio payload, not "
+            "an image)"
         )
     fmt = _jpeg.sniff_format(payload)
     if fmt is None:

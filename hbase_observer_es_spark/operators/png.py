@@ -5,7 +5,7 @@ stubbed because this container has no PIL/ffmpeg. PNG needs neither: the
 format is fully specified publicly (RFC 2083 / W3C PNG spec) and its only
 compression is DEFLATE, which ``zlib`` provides — the same from-spec
 discipline as the repo's Avro container reader and snappy decompressor
-(``sources/avrosrc.py``). This module implements the static-image subset:
+(``attic/sources/avrosrc.py``). This module implements the static-image subset:
 
 * 8-byte signature, length/type/data/CRC chunk stream (CRC32 VERIFIED per
   chunk — corruption dies loudly with chunk context, never decodes garbage);

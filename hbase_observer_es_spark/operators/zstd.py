@@ -40,7 +40,7 @@ and verified empirically by those round trips — a misremembered entry
 fails the cross-encoder comparison loudly.
 
 Scale posture: decompression happens inside the same one-task-per-shard
-``mapInPandas`` walk as every other archive codec (``sources/tarsrc.py``)
+``mapInPandas`` walk as every other archive codec (``attic/sources/tarsrc.py``)
 — a 100 TB ingest is embarrassingly parallel across shards, and the
 decoder is single-pass with output bounded by an explicit ``max_output``
 bomb budget (blocks are additionally bounded by the spec's 128 KiB

@@ -1,4 +1,4 @@
-"""From-spec AES (operators/aes.py) — FIPS-197.
+"""From-spec AES (attic/operators/aes.py) — FIPS-197.
 
 Pinning: the spec's own known-answer vectors (Appendix B worked example
 + Appendix C for all three key sizes) pin the computed S-box, key
@@ -13,7 +13,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.operators.aes import (
+from attic.operators.aes import (
     _SBOX,
     aes_cbc_decrypt,
     aes_cbc_encrypt,

@@ -1,4 +1,4 @@
-"""AGL core-subset glyph resolution (operators/agl.py) — every table
+"""AGL core-subset glyph resolution (attic/operators/agl.py) — every table
 entry is UCD-derived at import, so these tests pin the APPLICATION
 algorithm and a spread of known-value spot checks."""
 
@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.agl import GLYPH_MAP, glyph_to_text
+from attic.operators.agl import GLYPH_MAP, glyph_to_text
 
 
 def test_spot_values_across_the_families():

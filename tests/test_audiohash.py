@@ -8,13 +8,13 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.audiohash import (
+from attic.operators.audiohash import (
     HASH_BITS,
     audio_fingerprints_frame,
     audio_near_dups,
     energy_hash,
 )
-from hbase_observer_es_spark.operators.wav import WavAudio, parse_wav, write_wav
+from attic.operators.wav import WavAudio, parse_wav, write_wav
 
 
 def _clip16(samples, rate=8000, channels=1) -> WavAudio:
@@ -63,7 +63,7 @@ def test_rate_channel_and_gain_variants_agree():
     channel stereo copy, and a 2x-gain copy all fingerprint identically to
     the original (positive-gain invariance of energy-delta direction;
     phase-0 recovery of the 2x resample)."""
-    from hbase_observer_es_spark.operators.wav import resample_linear
+    from attic.operators.wav import resample_linear
 
     base = _ramp_clip(rising=True)
     h = energy_hash(base)

@@ -1,4 +1,4 @@
-"""Avro container source (sources/avrosrc.py): spec-golden decode, Spark
+"""Avro container source (attic/sources/avrosrc.py): spec-golden decode, Spark
 round-trips, codec handling, fail-loud structure checks.
 
 The golden tests build container files BYTE BY BYTE from the public Avro
@@ -14,7 +14,7 @@ import struct
 import pytest
 
 from hbase_observer_es_spark.io import table
-from hbase_observer_es_spark.sources.avrosrc import (
+from attic.sources.avrosrc import (
     MAGIC,
     avro_to_parquet,
     parse_avro_bytes,
@@ -170,7 +170,7 @@ def test_schema_drift_across_files_fails(spark, tmp_path):
 
 
 def test_writer_refuses_unbounded_frames(spark, tmp_path, monkeypatch):
-    import hbase_observer_es_spark.sources.avrosrc as av
+    import attic.sources.avrosrc as av
 
     monkeypatch.setattr(av, "WRITE_CAP_ROWS", 3)
     src = table(spark, SF_SMOKE, "documents")  # more than 3 rows
@@ -194,7 +194,7 @@ def test_avro_to_parquet_landing(spark, tmp_path):
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.sources.avrosrc import _zigzag_decode, _zigzag_encode
+from attic.sources.avrosrc import _zigzag_decode, _zigzag_encode
 
 _i64 = st.integers(min_value=-(1 << 63), max_value=(1 << 63) - 1)
 
@@ -232,7 +232,7 @@ _nasty = st.one_of(
 
 import zlib as _zlib
 
-from hbase_observer_es_spark.sources.avrosrc import (
+from attic.sources.avrosrc import (
     snappy_compress_literal,
     snappy_uncompress,
 )

@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from hbase_observer_es_spark.operators.binpack import (
+from attic.operators.binpack import (
     pack_whole_docs,
     packing_stats,
     place_bfd,
@@ -122,7 +122,7 @@ def test_zero_token_docs_land_in_real_bins(spark):
 
 
 def test_bpe_budget_via_n_tokens_col(spark):
-    from hbase_observer_es_spark.operators.bpe import add_bpe_token_count
+    from attic.operators.bpe import add_bpe_token_count
 
     docs = _docs(spark, [(1, "aa bb"), (2, "aa aa aa aa"), (3, "cc")])
     counted = add_bpe_token_count(docs, [(b"a", b"a")])  # 'aa' -> 1 token

@@ -1,5 +1,5 @@
 """BPE trainer/encoder tests — bit-exact-model discipline (no SQL oracle:
-the greedy rank loop is not expressible in SQL; see operators/bpe.py).
+the greedy rank loop is not expressible in SQL; see attic/operators/bpe.py).
 
 Two INDEPENDENT mirrors pin the implementation:
 
@@ -18,7 +18,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from hbase_observer_es_spark.operators.bpe import (
+from attic.operators.bpe import (
     WS_CLASS,
     add_bpe_token_count,
     encode_text,
@@ -258,7 +258,7 @@ def test_unicode_multibyte_roundtrip(spark):
 
 
 def test_tokenizer_stats_fertility(spark):
-    from hbase_observer_es_spark.operators.bpe import tokenizer_stats
+    from attic.operators.bpe import tokenizer_stats
 
     # train ONLY on the 'seen' slice; the unseen slice must compress worse
     rows = [("seen", "the quick brown fox " * 8)] * 20 + [

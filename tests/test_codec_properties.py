@@ -26,7 +26,7 @@ _SETTINGS = dict(max_examples=25, deadline=None)
     block=st.sampled_from([16, 64, 192]),
 )
 def test_flac_roundtrip_bitexact(samples, channels, block):
-    from hbase_observer_es_spark.operators.flac import encode_flac, parse_flac
+    from attic.operators.flac import encode_flac, parse_flac
 
     n = len(samples) - (len(samples) % channels)
     samples = samples[:n] or [0] * channels
@@ -46,7 +46,7 @@ def test_flac_roundtrip_bitexact(samples, channels, block):
     channels=st.integers(min_value=1, max_value=2),
 )
 def test_wav_roundtrip_bitexact(samples, channels):
-    from hbase_observer_es_spark.operators.wav import WavAudio, parse_wav, write_wav
+    from attic.operators.wav import WavAudio, parse_wav, write_wav
 
     n = len(samples) - (len(samples) % channels)
     samples = samples[:n] or [0] * channels
@@ -66,8 +66,8 @@ def test_wav_roundtrip_bitexact(samples, channels):
 def test_energy_hash_gain_and_stereo_invariance(samples, gain):
     """The fingerprint's documented invariances hold for ARBITRARY
     clips, not just the constructed ramps."""
-    from hbase_observer_es_spark.operators.audiohash import energy_hash
-    from hbase_observer_es_spark.operators.wav import WavAudio
+    from attic.operators.audiohash import energy_hash
+    from attic.operators.wav import WavAudio
 
     def clip(vals, ch=1):
         return WavAudio(1, ch, 8000, 16, len(vals) // ch,
@@ -159,7 +159,7 @@ def test_png_roundtrip_bitexact_rgb(seed, w, h):
 def test_resample_double_recovers_phase0(samples):
     """Up 2x then down 2x recovers the input exactly (phase-0 property
     of the exact-rational resampler)."""
-    from hbase_observer_es_spark.operators.wav import WavAudio, resample_linear
+    from attic.operators.wav import WavAudio, resample_linear
 
     a = WavAudio(1, 1, 8000, 16, len(samples),
                  struct.pack(f"<{len(samples)}h", *samples))

@@ -9,7 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hbase_observer_es_spark.sinks.compact import (
+from attic.sinks.compact import (
     STAGING,
     compact_dataset,
     compact_tree,

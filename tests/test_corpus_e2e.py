@@ -24,7 +24,7 @@ from hbase_observer_es_spark.operators.dedup import q_dedup_exact
 from hbase_observer_es_spark.operators.html_text import warc_html_documents
 from hbase_observer_es_spark.operators.text import q_text_langid, q_text_quality
 from hbase_observer_es_spark.io import table
-from hbase_observer_es_spark.sinks.dataset_export import export_dataset, verify_export
+from attic.sinks.dataset_export import export_dataset, verify_export
 from hbase_observer_es_spark.sources.warc import read_warc
 
 
@@ -139,7 +139,7 @@ def test_full_crawl_story_with_robots_and_link_rank(spark, tmp_path):
     compliance and graph layers COMPOSE with the publication surface."""
     from hbase_observer_es_spark.operators.graph import pagerank_over_edges
     from hbase_observer_es_spark.operators.html_text import warc_outlinks
-    from hbase_observer_es_spark.operators.robots import (
+    from attic.operators.robots import (
         filter_allowed,
         robots_policies,
     )
@@ -202,7 +202,7 @@ def test_wet_publication_closes_the_crawl_loop(spark, tmp_path):
     shards are themselves valid crawl input, so a corpus curated here can be
     mirrored, verified, and re-consumed by the SAME ingest path — the full
     Common Crawl round trip, with no format special-casing anywhere."""
-    from hbase_observer_es_spark.sinks.wet import read_wet, verify_wet, write_wet
+    from attic.sinks.wet import read_wet, verify_wet, write_wet
 
     (tmp_path / "crawl").mkdir()
     (tmp_path / "crawl" / "s.warc.gz").write_bytes(gzip.compress(_shard()))
@@ -234,7 +234,7 @@ def test_bpe_tokenizer_trains_on_and_counts_the_curated_corpus(spark, tmp_path):
     the curated (extracted + deduped) corpus, persist the merges artifact
     next to the dataset, reload it, and budget the corpus in REAL tokenizer
     tokens — the unit pack budgets and mixture weights are specified in."""
-    from hbase_observer_es_spark.operators.bpe import (
+    from attic.operators.bpe import (
         add_bpe_token_count,
         encode_text,
         merges_from_table,
@@ -278,7 +278,7 @@ def test_multimodal_payloads_publish_as_webdataset(spark, tmp_path):
         _fake_decode,
         q_mm_decode,
     )
-    from hbase_observer_es_spark.sinks.wds import read_wds, verify_wds, write_wds
+    from attic.sinks.wds import read_wds, verify_wds, write_wds
 
     sf = "/root/testdata/sf0.001"
     meta = q_mm_decode(spark, sf).select(

@@ -1,4 +1,4 @@
-"""Dataset publication sink (sinks/dataset_export.py): deterministic shards,
+"""Dataset publication sink (attic/sinks/dataset_export.py): deterministic shards,
 verifiable manifest, loud failure on tamper."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_observer_es_spark.io import table
-from hbase_observer_es_spark.sinks.dataset_export import (
+from attic.sinks.dataset_export import (
     MANIFEST,
     export_dataset,
     verify_export,
@@ -120,7 +120,7 @@ def test_manifest_file_is_committed_json(spark, tmp_path):
 def test_diff_exports_localizes_the_change(spark, tmp_path):
     """Edit ONE document → only that document's shard shows as changed; the
     incremental-mirror promise of deterministic key-hash sharding."""
-    from hbase_observer_es_spark.sinks.dataset_export import diff_exports
+    from attic.sinks.dataset_export import diff_exports
 
     src = table(spark, SF_SMOKE, "documents")
     m1 = export_dataset(src, str(tmp_path / "v1"), "doc_id", N_SHARDS)
@@ -141,7 +141,7 @@ def test_diff_exports_localizes_the_change(spark, tmp_path):
 
 
 def test_diff_exports_rejects_incomparable_manifests(spark, tmp_path):
-    from hbase_observer_es_spark.sinks.dataset_export import diff_exports
+    from attic.sinks.dataset_export import diff_exports
 
     src = table(spark, SF_SMOKE, "documents")
     m1 = export_dataset(src, str(tmp_path / "a"), "doc_id", 2)

@@ -84,7 +84,7 @@ def test_top_cut_is_deterministic(spark):
 
 
 def test_plans_stay_jvm_side(spark):
-    from hbase_observer_es_spark.plans.inspect import plan_string
+    from .plan_inspect import plan_string
 
     for fn in (q_dedup_substring, q_dedup_substring_top):
         plan = plan_string(fn(spark, SF_ORACLE))

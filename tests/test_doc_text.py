@@ -12,13 +12,13 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.cfb import (
+from attic.operators.cfb import (
     CFB_MAGIC,
     cfb_subformat,
     looks_like_cfb,
     parse_cfb,
 )
-from hbase_observer_es_spark.operators.doc_text import (
+from attic.operators.doc_text import (
     doc_meta,
     doc_text_frame,
     doc_to_text,
@@ -418,7 +418,7 @@ def test_doc_malformed_structures_refuse_with_offsets():
 
 
 def test_doc_meta_and_census_routing():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     doc = _make_doc([("census text\r", True)])
     m = doc_meta(doc, "t")
@@ -472,7 +472,7 @@ def test_doc_text_frame_through_spark(spark):
 
 
 def test_write_cfb_round_trip():
-    from hbase_observer_es_spark.operators.cfb import write_cfb
+    from attic.operators.cfb import write_cfb
 
     streams = {
         "tiny": b"t",
@@ -492,7 +492,7 @@ def test_write_cfb_round_trip():
 
 
 def test_write_cfb_guards():
-    from hbase_observer_es_spark.operators.cfb import write_cfb
+    from attic.operators.cfb import write_cfb
 
     with pytest.raises(ValueError, match="invalid"):
         write_cfb({"": b"x"})
@@ -511,7 +511,7 @@ def test_write_cfb_guards():
 def test_write_cfb_nested_storages_round_trip():
     """r15: '/'-separated paths create real storages; the reader's tree
     walk recovers every stream byte-exactly and the storages exist."""
-    from hbase_observer_es_spark.operators.cfb import parse_cfb, write_cfb
+    from attic.operators.cfb import parse_cfb, write_cfb
 
     streams = {
         "top": b"hello" * 300,
@@ -527,7 +527,7 @@ def test_write_cfb_nested_storages_round_trip():
 
 
 def test_write_doc_round_trip():
-    from hbase_observer_es_spark.operators.doc_text import write_doc
+    from attic.operators.doc_text import write_doc
 
     # cp1252 path (incl. the 0x93 mapping rows) and the utf-16 path
     for paragraphs in (
@@ -547,7 +547,7 @@ def test_write_doc_astral_chars_round_trip():
     """CPs count UTF-16 code units (Word's UCS-2 heritage): astral
     characters are TWO CPs each, and the writer must count them so —
     character counting silently truncated the document tail."""
-    from hbase_observer_es_spark.operators.doc_text import write_doc
+    from attic.operators.doc_text import write_doc
 
     paragraphs = ["\U0001F600\U0001F600 start", "tail paragraph"]
     assert doc_to_text(write_doc(paragraphs), "t") == (
@@ -640,7 +640,7 @@ def test_cfb_collation_is_utf16_code_unit_order():
     two-BMP-char name of equal Python len; (2) comparison must be
     code-unit order, not the file's little-endian byte order (U+00FF
     sorts before U+0100); (3) round trips still work with such names."""
-    from hbase_observer_es_spark.operators.cfb import _collate, parse_cfb, write_cfb
+    from attic.operators.cfb import _collate, parse_cfb, write_cfb
 
     # (1) length in code units: '𐐷' (U+10437, one astral char) = 2 units,
     # longer than the 1-unit 'z' and equal to 'zz'
@@ -667,7 +667,7 @@ def test_cfb_collation_is_per_code_unit_uppercase():
     """Review r15: Python's FULL case mapping ('ß' -> 'SS') would change
     the unit sequence and length; MS-CFB uppercases PER CODE UNIT, so a
     unit whose uppercase is not one BMP unit keeps its value."""
-    from hbase_observer_es_spark.operators.cfb import _collate, parse_cfb, write_cfb
+    from attic.operators.cfb import _collate, parse_cfb, write_cfb
 
     lw, key = _collate("ß")
     assert lw == 1 and key == (0x00DF).to_bytes(2, "big")  # NOT b'\x00S\x00S'
@@ -682,8 +682,8 @@ def test_cfb_subformat_msg_marker_is_root_only():
     """Review r15: an embedded Outlook item nested in a generic container
     must NOT classify the container as msg — the extractor requires the
     root marker, and the census would fold the mismatch to error."""
-    from hbase_observer_es_spark.operators.cfb import cfb_subformat, parse_cfb, write_cfb
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.cfb import cfb_subformat, parse_cfb, write_cfb
+    from attic.operators.media_census import classify_media
 
     data = write_cfb({
         "SomeData": b"x" * 40,
@@ -716,7 +716,7 @@ def test_write_cfb_nested_round_trip_property(streams):
     """r15 writer property: arbitrary path trees round-trip byte-exactly
     through write_cfb/parse_cfb (prefix-collision inputs are rejected by
     the writer's own guards and skipped here)."""
-    from hbase_observer_es_spark.operators.cfb import parse_cfb, write_cfb
+    from attic.operators.cfb import parse_cfb, write_cfb
 
     # drop inputs where one path is a prefix-storage of another's stream
     paths = set(streams)

@@ -1,4 +1,4 @@
-"""Exif APP1 parsing (operators/exif.py) — hand-built Exif TIFF streams.
+"""Exif APP1 parsing (attic/operators/exif.py) — hand-built Exif TIFF streams.
 
 Pins: IFD0 facts, the Exif and GPS sub-IFD walks, exact integer
 micro-degree GPS reduction (no float anywhere near a coordinate), both
@@ -10,7 +10,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.exif import jpeg_exif
+from attic.operators.exif import jpeg_exif
 
 
 def _mk_ifd(spec, at: int, endian: str = "<") -> bytes:
@@ -162,7 +162,7 @@ def test_census_jpeg_rows_carry_exif_detail():
     segment must also not break pixel decode (the APP1 walk and the
     entropy decode are independent)."""
     from hbase_observer_es_spark.operators.jpeg import encode_jpeg, decode_jpeg
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
     from hbase_observer_es_spark.operators.png import PngImage
 
     plain = encode_jpeg(PngImage(8, 8, 8, 0, 1, 8, bytes(range(64)), None))

@@ -9,7 +9,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.flac import (
+from attic.operators.flac import (
     _crc8,
     _crc16,
     encode_flac,
@@ -244,8 +244,8 @@ def test_encode_guards():
 
 
 def test_flac_to_wav_composes_with_the_audio_stack():
-    from hbase_observer_es_spark.operators.audiohash import energy_hash
-    from hbase_observer_es_spark.operators.wav import wav_features, write_wav
+    from attic.operators.audiohash import energy_hash
+    from attic.operators.wav import wav_features, write_wav
 
     samples = [((i * 211) % 2001) - 1000 for i in range(1300)]
     clip = flac_to_wav(encode_flac(samples, 1, 8000, 16, block_size=500))
@@ -283,8 +283,8 @@ def test_audio_frames_accept_flac_payloads(spark):
     """The WAV and FLAC copies of the same clip flow the same pipeline:
     identical features and identical fingerprints through the Spark
     frames — 'same audio, different container' dedup for free."""
-    from hbase_observer_es_spark.operators.audiohash import audio_fingerprints_frame
-    from hbase_observer_es_spark.operators.wav import (
+    from attic.operators.audiohash import audio_fingerprints_frame
+    from attic.operators.wav import (
         WavAudio, audio_features_frame, write_wav,
     )
 

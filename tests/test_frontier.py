@@ -1,4 +1,4 @@
-"""Crawl-frontier planner (operators/frontier.py): selection rules, rank
+"""Crawl-frontier planner (attic/operators/frontier.py): selection rules, rank
 ordering, politeness caps, and the full-stack composition from WARC."""
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from hbase_observer_es_spark.operators.frontier import (
+from attic.operators.frontier import (
     discovered_from_crawl,
     next_frontier,
 )
@@ -166,7 +166,7 @@ def test_child_sitemaps_and_robots_declarations_are_discovered(spark, tmp_path):
     crawled = warc.filter("warc_type = 'response'").select(
         F.col("target_uri").alias("url")
     )
-    from hbase_observer_es_spark.operators.robots import robots_policies
+    from attic.operators.robots import robots_policies
 
     planned = sorted(
         r["url"]
@@ -183,7 +183,7 @@ def test_full_stack_composition_from_warc(spark, tmp_path):
     at once."""
     from hbase_observer_es_spark.operators.graph import pagerank_over_edges
     from hbase_observer_es_spark.operators.html_text import warc_outlinks
-    from hbase_observer_es_spark.operators.robots import robots_policies
+    from attic.operators.robots import robots_policies
 
     def page(links):
         body = "<p>plenty of page prose here</p>" + "".join(

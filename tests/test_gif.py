@@ -337,7 +337,7 @@ def test_gif_frames_through_spark(spark):
 
 
 def test_composes_with_perceptual_hash():
-    from hbase_observer_es_spark.operators.imagehash import average_hash
+    from attic.operators.imagehash import average_hash
 
     img = decode_gif(_simple_gif([0, 1, 2, 3], 2, 2))
     assert 0 <= average_hash(img) < (1 << 64)

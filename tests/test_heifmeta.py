@@ -1,4 +1,4 @@
-"""HEIF/HEIC/AVIF metadata (operators/heifmeta.py) — ISO 23008-12.
+"""HEIF/HEIC/AVIF metadata (attic/operators/heifmeta.py) — ISO 23008-12.
 
 Hand-built item structures pin the box walk: ftyp brands, the meta
 fullbox's pitm/iinf tables, ipco property resolution through ipma so
@@ -12,7 +12,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.heifmeta import (
+from attic.operators.heifmeta import (
     decode_heif,
     heif_meta,
     looks_like_heif,
@@ -112,7 +112,7 @@ def test_structural_refusals_carry_offsets():
 
 
 def test_census_routes_heif_as_image_not_video():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     row = classify_media(_heic(), origin="a.heic")
     assert row["family"] == "image" and row["format"] == "heic"

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 
 from hbase_observer_es_spark.operators.hammingband import BAND_BITS, N_BANDS
-from hbase_observer_es_spark.operators.imagehash import (
+from attic.operators.imagehash import (
     _to_i64,
     average_hash,
     dhash,

@@ -301,7 +301,7 @@ def test_composes_with_existing_pixel_stack():
     """decode_jpeg output is a PngImage: resize + PNG re-encode + the
     perceptual hash all work unchanged, and the JPEG copy of an image
     hashes within the near-dup threshold of its PNG original."""
-    from hbase_observer_es_spark.operators.imagehash import average_hash, hamming64
+    from attic.operators.imagehash import average_hash, hamming64
     from hbase_observer_es_spark.operators.png import (
         decode_png,
         encode_png,

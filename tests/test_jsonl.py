@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hbase_observer_es_spark.io import table
-from hbase_observer_es_spark.sources.jsonl import (
+from attic.sources.jsonl import (
     jsonl_to_parquet,
     parquet_schema,
     read_jsonl,
@@ -77,9 +77,9 @@ def test_binary_columns_rejected(spark):
         write_jsonl(df, "/tmp/never-written")
 
 
-# -- CSV twin (sources/csvsrc.py): same ingest contract -----------------------
+# -- CSV twin (attic/sources/csvsrc.py): same ingest contract -----------------------
 
-from hbase_observer_es_spark.sources.csvsrc import read_csv, write_csv  # noqa: E402
+from attic.sources.csvsrc import read_csv, write_csv  # noqa: E402
 
 
 @pytest.mark.parametrize("name,key", [

@@ -1,4 +1,4 @@
-"""Line-level boilerplate dedup (operators/linededup.py): semantics on
+"""Line-level boilerplate dedup (attic/operators/linededup.py): semantics on
 crawl-shaped multi-line docs, DuckDB oracle parity, edge totality, and the
 composition with HTML extraction."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from hbase_observer_es_spark.operators.linededup import (
+from attic.operators.linededup import (
     boilerplate_lines,
     dedupe_lines,
 )

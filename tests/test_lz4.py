@@ -1,4 +1,4 @@
-"""From-spec LZ4 frame decoder (operators/lz4.py).
+"""From-spec LZ4 frame decoder (attic/operators/lz4.py).
 
 Pinned by TWO independent real-world implementations: pyarrow's
 bundled lz4 frame codec, and the system ``lz4`` CLI across its flag
@@ -21,7 +21,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.operators.lz4 import (
+from attic.operators.lz4 import (
     _xxh32,
     compress_lz4,
     decompress_lz4,
@@ -66,7 +66,7 @@ def test_concatenated_frames():
 def test_block_decoder_pinned_by_lz4_raw():
     """pyarrow's lz4_raw codec emits a BARE block — pinning
     _decode_block without any frame layer around it."""
-    from hbase_observer_es_spark.operators.lz4 import _decode_block
+    from attic.operators.lz4 import _decode_block
 
     data = b"repeat repeat repeat repeat tail " * 200
     raw = pa.Codec("lz4_raw").compress(data, asbytes=True)
@@ -193,8 +193,8 @@ def test_tar_lz4_shards_ingest():
     import io
     import tarfile
 
-    from hbase_observer_es_spark.operators.media_census import classify_media
-    from hbase_observer_es_spark.sources.tarsrc import _iter_members
+    from attic.operators.media_census import classify_media
+    from attic.sources.tarsrc import _iter_members
 
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w") as tf:

@@ -1,4 +1,4 @@
-"""LZFu / compressed-RTF codec (operators/lzfu.py) — MS-OXRTFCP.
+"""LZFu / compressed-RTF codec (attic/operators/lzfu.py) — MS-OXRTFCP.
 
 Pinning per the repo codec discipline: the decoder is pinned by (a) the
 spec's OWN §3.1 worked examples byte-for-byte, and (b) an INDEPENDENT
@@ -18,7 +18,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.operators.lzfu import (
+from attic.operators.lzfu import (
     _DICT_SIZE,
     _SEED,
     compress_lzfu,

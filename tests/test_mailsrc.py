@@ -10,7 +10,7 @@ import datetime as dt
 
 import pytest
 
-from hbase_observer_es_spark.sources.mailsrc import (
+from attic.sources.mailsrc import (
     looks_like_eml,
     looks_like_mbox,
     parse_eml,
@@ -199,7 +199,7 @@ def test_missing_date_is_zero_not_error():
 
 
 def test_census_family_message():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     assert looks_like_eml(SIMPLE)
     row = classify_media(SIMPLE, "t")
@@ -236,7 +236,7 @@ def test_read_mail_through_spark(spark, tmp_path):
 
 
 def test_write_eml_round_trip():
-    from hbase_observer_es_spark.sources.mailsrc import write_eml
+    from attic.sources.mailsrc import write_eml
 
     date_us = 1_056_380_100_000_000  # 2003-06-23T15:15:00Z, µs
     eml = write_eml(
@@ -264,7 +264,7 @@ def test_write_eml_round_trip():
 
 
 def test_write_mbox_round_trip_with_from_lines():
-    from hbase_observer_es_spark.sources.mailsrc import write_eml, write_mbox
+    from attic.sources.mailsrc import write_eml, write_mbox
 
     body = "From the top.\n>From quoted.\nmid From ok.\n"
     m1 = write_eml("a@x", "b@x", "one", 0, body)
@@ -279,7 +279,7 @@ def test_write_mbox_preserves_crlf_bytes():
     """Message bytes survive the mbox round trip VERBATIM (CRLF
     included) so the same message hashes identically whether ingested
     as .eml or out of an mbox."""
-    from hbase_observer_es_spark.sources.mailsrc import write_mbox
+    from attic.sources.mailsrc import write_mbox
 
     raw = SIMPLE  # CRLF line endings throughout, ends with \r\n
     assert split_mbox(write_mbox([raw, raw]), "t") == [raw, raw]

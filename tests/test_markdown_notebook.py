@@ -8,11 +8,11 @@ import json
 
 import pytest
 
-from hbase_observer_es_spark.operators.markdown_text import (
+from attic.operators.markdown_text import (
     markdown_to_text,
     markdown_to_text_frame,
 )
-from hbase_observer_es_spark.operators.notebook import (
+from attic.operators.notebook import (
     notebook_cells,
     notebook_cells_frame,
 )

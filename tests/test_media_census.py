@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import struct
 
-from hbase_observer_es_spark.operators.media_census import (
+from attic.operators.media_census import (
     classify_media,
     media_census_frame,
 )
@@ -13,10 +13,10 @@ from hbase_observer_es_spark.operators.media_census import (
 
 def _payloads():
     from hbase_observer_es_spark.operators.avi import write_avi_mjpeg
-    from hbase_observer_es_spark.operators.flac import encode_flac
+    from attic.operators.flac import encode_flac
     from hbase_observer_es_spark.operators.jpeg import encode_jpeg
     from hbase_observer_es_spark.operators.png import PngImage, encode_png
-    from hbase_observer_es_spark.operators.wav import WavAudio, write_wav
+    from attic.operators.wav import WavAudio, write_wav
     from tests.test_gif import _simple_gif
     from tests.test_mp3meta import _frame_v1l3_128_44100
     from tests.test_oggmeta import _opus_file
@@ -110,7 +110,7 @@ def test_census_classifies_bare_compressed_blobs():
 
     import pyarrow as pa
 
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     data = b"payload " * 4000
     z = classify_media(pa.Codec("zstd", compression_level=3).compress(data, asbytes=True), "t")

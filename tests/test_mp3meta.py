@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.mp3meta import (
+from attic.operators.mp3meta import (
     decode_mp3_audio,
     looks_like_mp3,
     mp3_meta,
@@ -125,7 +125,7 @@ def test_meta_through_spark(spark):
 
 
 def test_mp3_payload_named_in_audio_dispatch_refusal():
-    from hbase_observer_es_spark.operators.flac import decode_audio
+    from attic.operators.flac import decode_audio
 
     with pytest.raises(NotImplementedError, match=r"mp3 doc-2: audio decode not implemented"):
         decode_audio(_frame_v1l3_128_44100(), origin="doc-2")

@@ -8,7 +8,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.mp4meta import (
+from attic.operators.mp4meta import (
     decode_mp4_media,
     looks_like_mp4,
     mp4_meta,

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.cfb import parse_cfb, write_cfb
-from hbase_observer_es_spark.operators.msg_text import (
+from attic.operators.cfb import parse_cfb, write_cfb
+from attic.operators.msg_text import (
     msg_meta,
     msg_to_text,
     write_msg,
@@ -40,7 +40,7 @@ def test_recipients_keep_index_order():
 
 
 def test_census_routes_msg_as_message():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     data = write_msg("subj", "me", ["you"], "body", attachments=1)
     row = classify_media(data, "t")
@@ -61,7 +61,7 @@ def test_ansi_string8_refuses_by_name():
 
 def test_rtf_only_body_extracts_like_its_plain_twin():
     """r16: an RTF-only body (PidTagRtfCompressed, LZFu) decompresses
-    through operators/lzfu.py and extracts the SAME text as the
+    through attic/operators/lzfu.py and extracts the SAME text as the
     plain-body twin — closing the r15 by-name refusal. Census msg rows
     carry its char count."""
     body = "Hi all,\nthe café numbers are attached — 100% done."
@@ -107,8 +107,8 @@ def test_malformed_unicode_refuses_with_offsets():
 
 
 def test_doc_meta_and_subformat_route_msg():
-    from hbase_observer_es_spark.operators.cfb import cfb_subformat
-    from hbase_observer_es_spark.operators.doc_text import doc_meta, doc_to_text
+    from attic.operators.cfb import cfb_subformat
+    from attic.operators.doc_text import doc_meta, doc_to_text
 
     data = write_msg("subj", "me", ["you"], "body")
     assert cfb_subformat(parse_cfb(data)) == "msg"

@@ -7,7 +7,7 @@ import zipfile
 
 import pytest
 
-from hbase_observer_es_spark.operators.office_text import (
+from attic.operators.office_text import (
     docx_to_text,
     epub_to_text,
     odt_to_text,
@@ -151,7 +151,7 @@ def test_office_to_text_dispatch_and_refusals():
 
 
 def test_census_routes_office_and_archives():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     r = classify_media(_docx(_para("a") + _para("b")))
     assert (r["family"], r["format"], r["n_frames"]) == ("document", "docx", 2)
@@ -165,7 +165,7 @@ def test_census_routes_office_and_archives():
 
 
 def test_office_text_frame(spark):
-    from hbase_observer_es_spark.operators.office_text import office_text_frame
+    from attic.operators.office_text import office_text_frame
 
     df = spark.createDataFrame(
         [
@@ -187,7 +187,7 @@ def test_review_findings_census_safety_and_guards():
     """Second-pass review regressions: zero-byte signature members,
     full-document + UTF-16 DOCTYPE scan, bounded text:s, percent-encoded
     EPUB hrefs, text-box dedup, bomb-sized mimetype."""
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     # zero-byte word/document.xml: ValueError (census-foldable), no KeyError
     z = _zip({"word/document.xml": b""})

@@ -8,7 +8,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.oggmeta import (
+from attic.operators.oggmeta import (
     _crc32_ogg,
     decode_ogg_audio,
     looks_like_ogg,
@@ -108,7 +108,7 @@ def test_looks_like_and_dispatch_refusal():
     assert not looks_like_ogg(b"fLaC")
     with pytest.raises(NotImplementedError, match=r"ogg doc-3: audio decode not implemented"):
         decode_ogg_audio(b"OggS", origin="doc-3")
-    from hbase_observer_es_spark.operators.flac import decode_audio
+    from attic.operators.flac import decode_audio
 
     with pytest.raises(NotImplementedError, match=r"ogg doc-4: audio decode"):
         decode_audio(_opus_file(), origin="doc-4")

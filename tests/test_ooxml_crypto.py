@@ -1,4 +1,4 @@
-"""ECMA-376 encrypted-OOXML decryption (operators/ooxml_crypto.py).
+"""ECMA-376 encrypted-OOXML decryption (attic/operators/ooxml_crypto.py).
 
 Fixtures: plain docx/xlsx zips from the office_text test builders,
 wrapped by INDEPENDENT test-side implementations of both published
@@ -19,17 +19,17 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.aes import (
+from attic.operators.aes import (
     aes_cbc_encrypt,
     aes_encrypt_block,
 )
-from hbase_observer_es_spark.operators.cfb import write_cfb
-from hbase_observer_es_spark.operators.doc_text import doc_meta, doc_to_text
-from hbase_observer_es_spark.operators.office_text import (
+from attic.operators.cfb import write_cfb
+from attic.operators.doc_text import doc_meta, doc_to_text
+from attic.operators.office_text import (
     docx_to_text,
     xlsx_to_text,
 )
-from hbase_observer_es_spark.operators.ooxml_crypto import decrypt_ooxml
+from attic.operators.ooxml_crypto import decrypt_ooxml
 from tests.test_office_text import _docx, _xlsx
 
 _PW = "VelvetSweatshop"
@@ -206,7 +206,7 @@ def test_refusals_and_corruption_by_name():
     plain = _docx(_DOCX_XML)
     # extensible version
     enc = _wrap_standard(plain)
-    from hbase_observer_es_spark.operators.cfb import parse_cfb
+    from attic.operators.cfb import parse_cfb
 
     cfb = parse_cfb(enc, "t")
     info = cfb.read_stream("EncryptionInfo")
@@ -232,7 +232,7 @@ def test_refusals_and_corruption_by_name():
 
 
 def test_census_routes_encrypted_ooxml():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     row = classify_media(_wrap_standard(_docx(_DOCX_XML)), "t")
     assert (row["family"], row["format"]) == ("document", "ooxml-enc")
@@ -244,7 +244,7 @@ def test_doctype_guard_covers_whole_descriptor():
     prolog comments — the shared office guard scans the whole document."""
     plain = _docx(_DOCX_XML)
     enc = _wrap_agile(plain)
-    from hbase_observer_es_spark.operators.cfb import parse_cfb
+    from attic.operators.cfb import parse_cfb
 
     cfb = parse_cfb(enc, "t")
     info = cfb.read_stream("EncryptionInfo")
@@ -263,7 +263,7 @@ def test_agile_missing_attribute_is_valueerror():
     census fold), never KeyError."""
     plain = _docx(_DOCX_XML)
     enc = _wrap_agile(plain)
-    from hbase_observer_es_spark.operators.cfb import parse_cfb
+    from attic.operators.cfb import parse_cfb
 
     cfb = parse_cfb(enc, "t")
     info = cfb.read_stream("EncryptionInfo")

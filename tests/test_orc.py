@@ -1,4 +1,4 @@
-"""ORC ingest twin (sources/orcsrc.py): the columnar-boundary contract.
+"""ORC ingest twin (attic/sources/orcsrc.py): the columnar-boundary contract.
 
 Same spirit as the JSONL/CSV suites — round-trips are value-identical against
 the parquet fixtures, drift fails loudly — plus the two contrasts that define
@@ -10,8 +10,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import types as T
 
-from hbase_observer_es_spark.sources.jsonl import parquet_schema
-from hbase_observer_es_spark.sources.orcsrc import orc_to_parquet, read_orc, write_orc
+from attic.sources.jsonl import parquet_schema
+from attic.sources.orcsrc import orc_to_parquet, read_orc, write_orc
 from hbase_observer_es_spark.io import table
 
 from .conftest import SF_SMOKE

@@ -10,7 +10,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.operators.pdf_text import (
+from attic.operators.pdf_text import (
     PdfDocument,
     looks_like_pdf,
     pdf_meta,
@@ -348,7 +348,7 @@ def test_corruption_is_loud():
 
 
 def test_pdf_text_frame_and_census(spark):
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     p1 = _simple_pdf(_content(b"spark one"))
     p2 = _simple_pdf(_content(b"spark two", b"line two"))
@@ -426,7 +426,7 @@ def test_hybrid_xrefstm_takes_precedence_over_free_tombstones():
 def test_census_safe_error_types():
     """Review findings: crafted structures must raise ValueError (the
     census fold), never TypeError/RecursionError/IndexError."""
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     out = bytearray(b"%PDF-1.5\n")
     # XRef stream missing /Size
@@ -447,7 +447,7 @@ def test_census_safe_error_types():
     data = b.finish(1)
     doc = PdfDocument(data)
     doc.xref[9] = ("s", 9, 0)
-    from hbase_observer_es_spark.operators.pdf_text import _Ref
+    from attic.operators.pdf_text import _Ref
 
     with pytest.raises(ValueError, match=r"not a directly-stored"):
         doc.obj(_Ref(9, 0))
@@ -504,7 +504,7 @@ def test_form_xobject_text_recurses():
 
 
 def test_write_pdf_round_trip():
-    from hbase_observer_es_spark.operators.pdf_text import write_pdf
+    from attic.operators.pdf_text import write_pdf
 
     pages = [
         "Hello world.\nLine with (parens) and \\backslash.",
@@ -536,7 +536,7 @@ def test_write_pdf_property(pages):
     edges trim — the documented training-text convention)."""
     import re as _re
 
-    from hbase_observer_es_spark.operators.pdf_text import write_pdf
+    from attic.operators.pdf_text import write_pdf
 
     def norm(t):
         t = _re.sub(r"[ \t]+", " ", t)
@@ -555,7 +555,7 @@ def test_more_census_safe_crafted_structures():
     ObjStm header pairs, non-dict resources, and negative offsets all
     raise ValueError (census-foldable), never
     RecursionError/TypeError/AttributeError."""
-    from hbase_observer_es_spark.operators.pdf_text import _Ref
+    from attic.operators.pdf_text import _Ref
 
     # ObjStm whose /Length is an indirect ref INTO the same ObjStm
     out = bytearray(b"%PDF-1.5\n")
@@ -786,7 +786,7 @@ def test_rc4_empty_user_password_decrypts(r):
 
 
 def test_rc4_object_level_strings_decrypt():
-    from hbase_observer_es_spark.operators.pdf_text import _Ref
+    from attic.operators.pdf_text import _Ref
 
     doc = PdfDocument(_encrypted_pdf(r=3))
     info = doc._resolve(doc.trailer["Info"])
@@ -824,7 +824,7 @@ def test_encrypted_without_id_is_loud():
 #
 # Fixture derivations (Algorithms 2/3/4/5, the 2.B KDF, per-object
 # keys incl. the AESV2 'sAlT' extension) are test-side transcriptions;
-# the AES primitive itself comes from operators/aes.py, whose FIPS-197
+# the AES primitive itself comes from attic/operators/aes.py, whose FIPS-197
 # known-answer pins are independent of anything PDF (tests/test_aes.py).
 
 
@@ -841,7 +841,7 @@ def _t_aes_wrap(okey: bytes, num: int, data: bytes) -> bytes:
     """IV + CBC + PKCS#5, deterministic per-object IV."""
     import hashlib
 
-    from hbase_observer_es_spark.operators.aes import aes_cbc_encrypt
+    from attic.operators.aes import aes_cbc_encrypt
 
     iv = hashlib.md5(b"iv%d" % num).digest()
     pad = 16 - len(data) % 16
@@ -897,7 +897,7 @@ def _encrypted_pdf_v4(cfm: bytes = b"V2", user_pw: bytes = b"",
 def _t_hash_2b(pw: bytes, salt: bytes, udata: bytes) -> bytes:
     import hashlib
 
-    from hbase_observer_es_spark.operators.aes import aes_cbc_encrypt
+    from attic.operators.aes import aes_cbc_encrypt
 
     k = hashlib.sha256(pw + salt + udata).digest()
     i = 0
@@ -917,7 +917,7 @@ def _encrypted_pdf_v5(r: int = 6, user_pw: bytes = b"",
     """V5 AES-256 document (R5 = single-SHA256, R6 = the 2.B KDF)."""
     import hashlib
 
-    from hbase_observer_es_spark.operators.aes import (
+    from attic.operators.aes import (
         aes_cbc_encrypt,
         aes_encrypt_block,
     )
@@ -964,7 +964,7 @@ def _encrypted_pdf_v5(r: int = 6, user_pw: bytes = b"",
 def test_v4_crypt_filters_decrypt(cfm):
     data = _encrypted_pdf_v4(cfm=cfm)
     assert pdf_to_text(data) == "Filtered but readable."
-    from hbase_observer_es_spark.operators.pdf_text import _Ref
+    from attic.operators.pdf_text import _Ref
 
     doc = PdfDocument(data)
     assert doc._resolve(doc.trailer["Info"])["Title"] == b"V4 title"

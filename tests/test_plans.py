@@ -16,11 +16,9 @@ import pytest
 from hbase_observer_es_spark.registry import all_queries
 
 from .conftest import SF_ORACLE
+from .plan_inspect import plan_facts, plan_string
 
 QUERIES = all_queries()
-
-
-from hbase_observer_es_spark.plans.inspect import plan_facts, plan_string
 
 
 def plan_of(spark, name: str) -> str:

@@ -8,7 +8,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.ppt_text import (
+from attic.operators.ppt_text import (
     ppt_meta,
     ppt_to_text,
 )
@@ -69,7 +69,7 @@ def test_basic_text_extraction():
 
 
 def test_census_reports_ppt_chars():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     data = _ppt(_rec(0x03EE, _text_bytes("census text"), container=True))
     row = classify_media(data, "t")

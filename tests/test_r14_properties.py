@@ -7,9 +7,9 @@ from __future__ import annotations
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from hbase_observer_es_spark.operators.cfb import parse_cfb, write_cfb
-from hbase_observer_es_spark.operators.doc_text import doc_to_text, write_doc
-from hbase_observer_es_spark.sources.mailsrc import (
+from attic.operators.cfb import parse_cfb, write_cfb
+from attic.operators.doc_text import doc_to_text, write_doc
+from attic.sources.mailsrc import (
     parse_eml,
     parse_mailbox,
     write_eml,

@@ -1,10 +1,10 @@
-"""Raw-text corpus source (sources/rawtext.py): one file = one document."""
+"""Raw-text corpus source (attic/sources/rawtext.py): one file = one document."""
 
 from __future__ import annotations
 
 import os
 
-from hbase_observer_es_spark.sources.rawtext import (
+from attic.sources.rawtext import (
     read_text_corpus,
     text_corpus_to_parquet,
 )

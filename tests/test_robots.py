@@ -1,4 +1,4 @@
-"""robots.txt / RFC 9309 (operators/robots.py): parsing, group selection,
+"""robots.txt / RFC 9309 (attic/operators/robots.py): parsing, group selection,
 rule precedence (including the RFC's own examples), wildcard/anchor
 patterns, and the Spark host-join filter."""
 
@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.robots import (
+from attic.operators.robots import (
     filter_allowed,
     is_allowed,
     parse_robots,
@@ -111,7 +111,7 @@ def test_parse_groups_structure():
 
 
 def test_sitemap_directives_discovered():
-    from hbase_observer_es_spark.operators.robots import sitemaps_in_robots
+    from attic.operators.robots import sitemaps_in_robots
 
     txt = """
 User-agent: *
@@ -134,7 +134,7 @@ def test_sitemap_directive_behind_bom_is_discovered():
     """parse_robots strips the UTF-8 BOM; the sitemap scan must apply the
     SAME strip or a line-1 Sitemap: directive parses as the key
     '\\ufeffsitemap' and is silently dropped (fourth-review finding)."""
-    from hbase_observer_es_spark.operators.robots import sitemaps_in_robots
+    from attic.operators.robots import sitemaps_in_robots
 
     txt = "﻿Sitemap: http://x.example/s.xml\nUser-agent: *\nDisallow:"
     assert sitemaps_in_robots(txt) == ["http://x.example/s.xml"]

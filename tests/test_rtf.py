@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.rtf_text import (
+from attic.operators.rtf_text import (
     looks_like_rtf,
     rtf_text_frame,
     rtf_to_text,
@@ -104,7 +104,7 @@ def test_rtf_through_spark(spark):
 
 
 def test_rtf_through_census():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     r = classify_media(rb"{\rtf1 Hello\par}")
     assert (r["family"], r["format"], r["detail"]) == (

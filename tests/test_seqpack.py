@@ -6,8 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hbase_observer_es_spark.operators.bpe import encode_text, train_bpe
-from hbase_observer_es_spark.operators.seqpack import pack_training_sequences
+from attic.operators.bpe import encode_text, train_bpe
+from attic.operators.seqpack import pack_training_sequences
 from tests.conftest import SF_ORACLE
 
 

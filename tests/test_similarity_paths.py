@@ -64,7 +64,7 @@ def test_trained_ivf_reads_no_label(spark):
     import re
 
     from hbase_observer_es_spark.operators.similarity import q_sim_ivf_trained
-    from hbase_observer_es_spark.plans.inspect import plan_string
+    from .plan_inspect import plan_string
 
     plan = plan_string(q_sim_ivf_trained(spark, SF_ORACLE))
     scans = [

@@ -1,11 +1,11 @@
-"""Sitemap protocol (operators/sitemap.py): urlset/sitemapindex parsing,
+"""Sitemap protocol (attic/operators/sitemap.py): urlset/sitemapindex parsing,
 CDATA/entities, gzip bodies, and the WARC frame extraction."""
 
 from __future__ import annotations
 
 import gzip
 
-from hbase_observer_es_spark.operators.sitemap import (
+from attic.operators.sitemap import (
     parse_sitemap,
     warc_sitemap_urls,
 )

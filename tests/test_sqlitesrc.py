@@ -1,4 +1,4 @@
-"""SQLite dataset source (sources/sqlitesrc.py) — stdlib engine over
+"""SQLite dataset source (attic/sources/sqlitesrc.py) — stdlib engine over
 byte payloads via Connection.deserialize.
 
 The stdlib is both producer and reader here (the zlib-for-gzip
@@ -13,7 +13,7 @@ import sqlite3
 
 import pytest
 
-from hbase_observer_es_spark.sources.sqlitesrc import (
+from attic.sources.sqlitesrc import (
     looks_like_sqlite,
     sqlite_meta,
     sqlite_rows,
@@ -79,7 +79,7 @@ def test_meta_and_census_routing():
     assert {"name": "docs", "rows": 3} in m["tables"]
     assert m["page_size"] >= 512 and m["encoding"].startswith("UTF")
 
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     row = classify_media(_CORPUS, origin="corpus.db")
     assert (row["family"], row["format"]) == ("dataset", "sqlite")
@@ -102,7 +102,7 @@ def test_wal_header_is_surfaced(tmp_path):
     m = sqlite_meta(data)
     assert m["wal"] is True
     assert sqlite_rows(data, "t")[1] == [(42,)]
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     assert "wal snapshot" in classify_media(data, origin="w.db")["detail"]
 
@@ -155,7 +155,7 @@ def test_census_classifies_columnar_dataset_payloads():
     import pyarrow.orc as orc
     import pyarrow.parquet as pq
 
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     t = pa.table({"doc_id": [1, 2, 3], "text": ["a", "b", "c"]})
     buf = io.BytesIO()

@@ -106,7 +106,7 @@ def test_streaming_plan_capture_records_executed_state_plan(spark):
     parser extracts the state-store posture — including the isolated
     session's state partition count, which must appear in the plan text
     (proof the newSession() conf actually drove the state store)."""
-    from hbase_observer_es_spark.plans.inspect import streaming_plan_facts
+    from .plan_inspect import streaming_plan_facts
     from hbase_observer_es_spark.streaming import stateful
 
     assert stateful.LAST_PLANS is None  # default: zero overhead
@@ -148,7 +148,7 @@ def test_streaming_plan_facts_rejects_capture_sentinel():
     plausible all-zero posture (review finding r9)."""
     import pytest
 
-    from hbase_observer_es_spark.plans.inspect import streaming_plan_facts
+    from .plan_inspect import streaming_plan_facts
 
     with pytest.raises(ValueError, match="physical section"):
         streaming_plan_facts("<capture failed: AttributeError: boom>")

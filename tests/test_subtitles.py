@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from hbase_observer_es_spark.operators.subtitles import (
+from attic.operators.subtitles import (
     align_captions,
     captions_frame,
     parse_captions,
@@ -134,7 +134,7 @@ def test_alignment_composes_with_real_segments(spark):
     """End-to-end: real WAV payload → audio_segments_frame → cue join."""
     import struct
 
-    from hbase_observer_es_spark.operators.wav import (
+    from attic.operators.wav import (
         WavAudio, audio_segments_frame, write_wav,
     )
 

@@ -9,6 +9,8 @@ bulk batch directory must hold each of its batch's actions exactly once: the
 replayable-source plus idempotent-sink argument for exactly-once delivery.
 The faults are raised from the test (``os.replace``/``shutil.rmtree`` as the
 sink calls them, or the ``foreachBatch`` body), not by hooks in the package.
+``inside_run_write`` also tears one parquet file of the batch's run directory
+before the crash, as a write cut short would leave it.
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import StreamingQueryException
 
@@ -37,7 +41,10 @@ N_BATCHES = 6
 # with 2 key partitions, batch 3 folds partition 1 (3 runs, (3 + 1) % K == 0)
 # and deletes its superseded runs: every crash point below is a fold batch
 CRASH_BATCH = 3
-POINTS = ("before_manifest", "before_bulk", "before_stream_commit", "before_delete")
+POINTS = (
+    "inside_run_write", "before_manifest", "before_bulk", "before_stream_commit",
+    "before_delete",
+)
 
 
 def _stage(in_dir: str, log: ChangeLog) -> list[dict]:
@@ -62,6 +69,15 @@ def _bulk_counts(batch_dir: str) -> tuple[int, int]:
     return updates, deletes
 
 
+def _tear_run_file(index: str) -> str:
+    """Truncate one parquet file of the crash batch's run directory to half
+    its size: no footer, so no reader can open it."""
+    path = sorted(glob.glob(os.path.join(index, f"v{CRASH_BATCH}", "_p=*", "*.parquet")))[0]
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    return path
+
+
 @pytest.mark.parametrize("point", POINTS)
 def test_sync_crash_restart_matches_replay(spark, monkeypatch, point):
     out = scratch_dir(f"sync_crash_{point}")
@@ -71,16 +87,20 @@ def test_sync_crash_restart_matches_replay(spark, monkeypatch, point):
     infos = _stage(in_dir, log)
     index, bulk_dir, ckpt = (os.path.join(out, d) for d in ("index", "bulk", "ckpt"))
     fired = []
+    torn = []
 
     def fault(real):
         def wrapped(*args, **kwargs):
             if fired == ["armed"]:
                 fired[0] = "fired"
+                if point == "inside_run_write":
+                    torn.append(_tear_run_file(index))
                 raise OSError(f"injected crash: {point}")
             return real(*args, **kwargs)
         return wrapped
 
-    if point == "before_manifest":
+    if point in ("inside_run_write", "before_manifest"):
+        # the manifest rename is the sink's only os.replace
         monkeypatch.setattr(keyed_parquet.os, "replace", fault(os.replace))
     if point == "before_delete":
         monkeypatch.setattr(keyed_parquet.shutil, "rmtree", fault(shutil.rmtree))
@@ -120,6 +140,9 @@ def test_sync_crash_restart_matches_replay(spark, monkeypatch, point):
 
     run(crash=True)
     assert fired == ["fired"]
+    if point == "inside_run_write":
+        with pytest.raises(pa.ArrowInvalid):  # the torn file has no footer
+            pq.ParquetFile(torn[0])
     sink = run(crash=False)  # restart: same checkpoint, fresh objects
 
     got = _cells(sink.read(spark).toArrow().to_pylist())

@@ -9,7 +9,7 @@ import tarfile
 
 import pytest
 
-from hbase_observer_es_spark.sources.tarsrc import (
+from attic.sources.tarsrc import (
     _iter_members,
     read_tar_members,
     tar_texts_to_documents,
@@ -61,7 +61,7 @@ def test_member_glob_filters_inside_walk():
 def test_guards_are_loud():
     with pytest.raises(ValueError, match=r"not a readable tar archive"):
         list(_iter_members(b"definitely not a tar file" + b"\x00" * 600, "t"))
-    import hbase_observer_es_spark.sources.tarsrc as mod
+    import attic.sources.tarsrc as mod
 
     data = _tar({"big.bin": b"x" * 64})
     old_member = mod.MAX_MEMBER_BYTES
@@ -91,7 +91,7 @@ def test_read_members_and_zip_union(spark, tmp_path):
         zf.writestr("y.txt", b"zip text")
     (tmp_path / "d2.zip").write_bytes(zbuf.getvalue())
 
-    from hbase_observer_es_spark.sources.zipsrc import read_zip_members
+    from attic.sources.zipsrc import read_zip_members
 
     tars = read_tar_members(spark, str(tmp_path))
     zips = read_zip_members(spark, str(tmp_path))
@@ -136,7 +136,7 @@ def test_truncated_gzip_layer_is_a_named_valueerror():
 
 
 def test_header_count_bomb_guard():
-    import hbase_observer_es_spark.sources.tarsrc as mod
+    import attic.sources.tarsrc as mod
 
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w") as tf:
@@ -203,7 +203,7 @@ def test_tar_zst_decodes_for_real(spark, tmp_path):
     independent encoder here is pyarrow's bundled libzstd."""
     import pyarrow as pa
 
-    from hbase_observer_es_spark.sources.tarsrc import TAR_GLOB
+    from attic.sources.tarsrc import TAR_GLOB
 
     assert "tar.zst" in TAR_GLOB and "tzst" in TAR_GLOB
     members = {"a.txt": b"alpha " * 400, "sub/b.txt": b"beta"}

@@ -122,7 +122,7 @@ def test_refusals():
 
 
 def test_composes_with_pixel_stack():
-    from hbase_observer_es_spark.operators.imagehash import average_hash
+    from attic.operators.imagehash import average_hash
     from hbase_observer_es_spark.operators.png import encode_png
 
     img = decode_tiff(_tiff(bytes(range(64)), 8, 8))
@@ -132,7 +132,7 @@ def test_composes_with_pixel_stack():
 
 def test_dispatch_and_census_route_tiff():
     from hbase_observer_es_spark.operators.jpeg import decode_image
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     data = _tiff(bytes(range(64)), 8, 8)
     assert decode_image(data).width == 8
@@ -146,7 +146,7 @@ def test_dispatch_and_census_route_tiff():
 def test_truncation_and_empty_chain_are_valueerrors():
     """Census survival: a 4-byte magic-only payload and a zero first-IFD
     offset must both die as ValueError, never struct.error/StopIteration."""
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     with pytest.raises(ValueError, match=r"too short for a TIFF header"):
         tiff_meta(b"II*\x00")
@@ -599,7 +599,7 @@ def test_bigtiff_meta_and_decode_both_endians():
 
 def test_bigtiff_through_dispatch_and_census():
     from hbase_observer_es_spark.operators.jpeg import decode_image, sniff_format
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     data = _bigtiff(bytes(range(12)), 4, 3)
     assert sniff_format(data) == "tiff"

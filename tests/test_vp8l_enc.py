@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 
 from hbase_observer_es_spark.operators.png import PngImage
 from hbase_observer_es_spark.operators.vp8l import decode_vp8l
-from hbase_observer_es_spark.operators.vp8l_enc import (
+from attic.operators.vp8l_enc import (
     encode_vp8l,
     write_webp,
     write_webp_anim,

@@ -1,4 +1,4 @@
-"""WARC member index (sources/warc_cdx.py): member-boundary walk, CDX rows,
+"""WARC member index (attic/sources/warc_cdx.py): member-boundary walk, CDX rows,
 range-request point reads, degraded layouts, WET composition."""
 
 from __future__ import annotations
@@ -10,8 +10,8 @@ import os
 
 import pytest
 
-from hbase_observer_es_spark.sinks.wet import write_wet
-from hbase_observer_es_spark.sources.warc_cdx import (
+from attic.sinks.wet import write_wet
+from attic.sources.warc_cdx import (
     fetch_member,
     index_warc_bytes,
     warc_cdx,

@@ -8,7 +8,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.wav import (
+from attic.operators.wav import (
     audio_features_frame,
     looks_like_wav,
     parse_wav,
@@ -182,7 +182,7 @@ def test_fmt_violations(chunks, msg):
 
 
 def test_sum_abs_overflow_guard(monkeypatch):
-    import hbase_observer_es_spark.operators.wav as wavmod
+    import attic.operators.wav as wavmod
 
     monkeypatch.setattr(wavmod, "_SUM_ABS_CAP", 10)
     a = parse_wav(_wav(_fmt(1, 1, 8000, 16), _chunk(b"data", _pcm16([6, 6]))))
@@ -269,7 +269,7 @@ def test_write_wav_roundtrip_every_format():
              _chunk(b"data", b"\x01\x00\x00\xff\xff\xff\x00\x00\x80")),
         _wav(_fmt(3, 1, 8000, 32), _chunk(b"data", struct.pack("<2f", 0.5, -0.25))),
     ]
-    from hbase_observer_es_spark.operators.wav import write_wav
+    from attic.operators.wav import write_wav
 
     for data in builds:
         a = parse_wav(data)
@@ -284,7 +284,7 @@ def test_write_wav_roundtrip_every_format():
 
 
 def test_write_wav_odd_data_pads_even():
-    from hbase_observer_es_spark.operators.wav import write_wav
+    from attic.operators.wav import write_wav
 
     a = parse_wav(_wav(_fmt(1, 1, 8000, 8), _chunk(b"data", bytes([128, 200, 50]))))
     out = write_wav(a)
@@ -293,7 +293,7 @@ def test_write_wav_odd_data_pads_even():
 
 
 def test_write_wav_rejects_geometry_lies():
-    from hbase_observer_es_spark.operators.wav import WavAudio, write_wav
+    from attic.operators.wav import WavAudio, write_wav
 
     with pytest.raises(ValueError, match=r"data length 3 != n_frames 2"):
         write_wav(WavAudio(1, 1, 8000, 16, 2, b"\x00\x00\x00"))
@@ -315,7 +315,7 @@ def test_write_wav_float_emits_fact_chunk():
     """The WAVE spec mandates a fact chunk for non-PCM formats: tag-3
     output carries fact(n_frames) between fmt and data; PCM output does
     not. parse_wav skips it as an unknown chunk, so round-trip holds."""
-    from hbase_observer_es_spark.operators.wav import write_wav
+    from attic.operators.wav import write_wav
 
     f = parse_wav(_wav(_fmt(3, 1, 8000, 32), _chunk(b"data", struct.pack("<2f", 0.5, -0.25))))
     out = write_wav(f)
@@ -327,7 +327,7 @@ def test_write_wav_float_emits_fact_chunk():
 
 
 def test_slice_frames_bounds_and_content():
-    from hbase_observer_es_spark.operators.wav import slice_frames
+    from attic.operators.wav import slice_frames
 
     a = parse_wav(_wav(_fmt(1, 2, 8000, 16),
                        _chunk(b"data", _pcm16([1, 2, 3, 4, 5, 6]))))
@@ -345,7 +345,7 @@ def test_audio_segments_fan_out(spark):
     samples = [0, 1000, -1000, 32767, -32768, 5, -5]
     payload = _wav(_fmt(1, 1, 8000, 16), _chunk(b"data", _pcm16(samples)))
     df = spark.createDataFrame([(1, payload)], "doc_id long, payload binary")
-    from hbase_observer_es_spark.operators.wav import audio_segments_frame
+    from attic.operators.wav import audio_segments_frame
 
     got = {
         r.seg_idx: (r.start_frame, r.n_frames, r.peak, r.zero_crossings, r.sum_abs)
@@ -361,7 +361,7 @@ def test_audio_segments_fan_out(spark):
 def test_audio_segments_overlapping_hop(spark):
     payload = _wav(_fmt(1, 1, 8000, 16), _chunk(b"data", _pcm16([10, 20, 30, 40])))
     df = spark.createDataFrame([(1, payload)], "doc_id long, payload binary")
-    from hbase_observer_es_spark.operators.wav import audio_segments_frame
+    from attic.operators.wav import audio_segments_frame
 
     rows = audio_segments_frame(df, window_frames=3, hop_frames=1).collect()
     assert [(r.start_frame, r.n_frames) for r in sorted(rows, key=lambda r: r.seg_idx)] == [
@@ -375,7 +375,7 @@ def test_audio_segments_zero_frame_clip_keeps_coverage_row(spark):
     """A valid empty-data clip must not vanish from the per-doc output."""
     payload = _wav(_fmt(1, 1, 8000, 16), _chunk(b"data", b""))
     df = spark.createDataFrame([(9, payload)], "doc_id long, payload binary")
-    from hbase_observer_es_spark.operators.wav import audio_segments_frame
+    from attic.operators.wav import audio_segments_frame
 
     rows = audio_segments_frame(df, window_frames=4).collect()
     assert [(r.doc_id, r.seg_idx, r.start_frame, r.n_frames, r.peak,
@@ -389,7 +389,7 @@ def test_audio_segments_float_clip_matches_per_slice_features(spark):
     a standalone wav_features of the same slice."""
     vals = [0.5, -0.25, 0.125, -0.0625, 0.75]
     payload = _wav(_fmt(3, 1, 8000, 32), _chunk(b"data", struct.pack("<5f", *vals)))
-    from hbase_observer_es_spark.operators.wav import (
+    from attic.operators.wav import (
         audio_segments_frame, slice_frames, wav_features,
     )
 
@@ -408,7 +408,7 @@ def test_audio_segments_float_clip_matches_per_slice_features(spark):
 
 
 def test_to_mono_floor_mean_per_frame():
-    from hbase_observer_es_spark.operators.wav import to_mono
+    from attic.operators.wav import to_mono
 
     a = parse_wav(_wav(_fmt(1, 2, 8000, 16),
                        _chunk(b"data", _pcm16([100, 201, -5, -6]))))
@@ -418,7 +418,7 @@ def test_to_mono_floor_mean_per_frame():
 
 
 def test_to_mono_refuses_float_and_passes_mono_through():
-    from hbase_observer_es_spark.operators.wav import to_mono
+    from attic.operators.wav import to_mono
 
     f = parse_wav(_wav(_fmt(3, 1, 8000, 32), _chunk(b"data", struct.pack("<f", 0.5))))
     with pytest.raises(ValueError, match=r"to_mono needs PCM"):
@@ -428,7 +428,7 @@ def test_to_mono_refuses_float_and_passes_mono_through():
 
 
 def test_to_pcm16_every_source_depth():
-    from hbase_observer_es_spark.operators.wav import to_pcm16
+    from attic.operators.wav import to_pcm16
 
     b8 = parse_wav(_wav(_fmt(1, 1, 8000, 8), _chunk(b"data", bytes([128, 255, 0]))))
     assert to_pcm16(b8).samples() == [0, 127 << 8, -128 << 8]
@@ -448,7 +448,7 @@ def test_to_pcm16_every_source_depth():
 def test_resample_linear_exact_midpoints():
     """8000 -> 16000 doubles frames; odd output frames sit exactly halfway
     between input neighbours (frac 8000/16000), floor division."""
-    from hbase_observer_es_spark.operators.wav import resample_linear
+    from attic.operators.wav import resample_linear
 
     a = parse_wav(_wav(_fmt(1, 1, 8000, 16),
                        _chunk(b"data", _pcm16([0, 100, -101]))))
@@ -461,7 +461,7 @@ def test_resample_linear_exact_midpoints():
 
 
 def test_resample_linear_stereo_interleave_and_guards():
-    from hbase_observer_es_spark.operators.wav import resample_linear
+    from attic.operators.wav import resample_linear
 
     a = parse_wav(_wav(_fmt(1, 2, 8000, 16),
                        _chunk(b"data", _pcm16([0, 1000, 100, -1000]))))
@@ -474,7 +474,7 @@ def test_resample_linear_stereo_interleave_and_guards():
 
 
 def test_normalize_audio_idempotent_bytes():
-    from hbase_observer_es_spark.operators.wav import normalize_audio, write_wav
+    from attic.operators.wav import normalize_audio, write_wav
 
     a = parse_wav(_wav(_fmt(1, 2, 44100, 8),
                        _chunk(b"data", bytes([128, 200, 30, 250, 90, 128]))))
@@ -485,7 +485,7 @@ def test_normalize_audio_idempotent_bytes():
 
 
 def test_audio_normalize_frame_roundtrip(spark):
-    from hbase_observer_es_spark.operators.wav import (
+    from attic.operators.wav import (
         audio_normalize_frame, normalize_audio,
     )
 
@@ -503,7 +503,7 @@ def test_audio_normalize_frame_roundtrip(spark):
 
 
 def test_to_pcm16_nan_refused_with_origin_context():
-    from hbase_observer_es_spark.operators.wav import to_pcm16
+    from attic.operators.wav import to_pcm16
 
     payload = _wav(_fmt(3, 2, 8000, 32),
                    _chunk(b"data", struct.pack("<4f", 0.0, 0.5, float("nan"), 1.0)))
@@ -522,7 +522,7 @@ def test_g711_tables_match_the_stdlib_reference():
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", DeprecationWarning)
         import audioop
-    from hbase_observer_es_spark.operators.wav import _ALAW, _MULAW
+    from attic.operators.wav import _ALAW, _MULAW
 
     for b in range(256):
         (want_u,) = struct.unpack("<h", audioop.ulaw2lin(bytes([b]), 2))
@@ -542,7 +542,7 @@ def test_g711_wav_expands_to_linear_pcm():
 
 
 def test_g711_composes_with_features_and_normalize():
-    from hbase_observer_es_spark.operators.wav import normalize_audio
+    from attic.operators.wav import normalize_audio
 
     data = _wav(_fmt(7, 1, 8000, 8), _chunk(b"data", bytes([0x80, 0x00] * 4)))
     a = parse_wav(data)

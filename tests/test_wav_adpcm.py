@@ -10,7 +10,7 @@ import warnings
 
 import pytest
 
-from hbase_observer_es_spark.operators.wav import parse_wav
+from attic.operators.wav import parse_wav
 
 
 def _fmt_chunk(ch, rate, block_align, tag=0x11, depth=4):
@@ -127,7 +127,7 @@ def test_guards_are_loud():
 def test_composes_with_the_pcm_audio_stack():
     """Expansion happens at the parse boundary: features and the write
     path see plain 16-bit PCM."""
-    from hbase_observer_es_spark.operators.wav import wav_features, write_wav
+    from attic.operators.wav import wav_features, write_wav
 
     blk = _block([(123, 4)], [[b"\x12\x34\x56\x78"]])
     audio = parse_wav(_adpcm_wav(1, 8000, [blk]))

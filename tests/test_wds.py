@@ -10,7 +10,7 @@ import tarfile
 
 import pytest
 
-from hbase_observer_es_spark.sinks.wds import (
+from attic.sinks.wds import (
     MANIFEST,
     read_wds,
     verify_wds,

@@ -1,4 +1,4 @@
-"""WET sink (sinks/wet.py): conversion-record publication, byte-determinism,
+"""WET sink (attic/sinks/wet.py): conversion-record publication, byte-determinism,
 member-per-record layout, manifest verification, documents round-trip."""
 
 from __future__ import annotations
@@ -10,7 +10,7 @@ import zlib
 
 import pytest
 
-from hbase_observer_es_spark.sinks.wet import (
+from attic.sinks.wet import (
     DEFAULT_DATE,
     MANIFEST,
     read_wet,
@@ -314,7 +314,7 @@ def test_wet_determinism_with_tie_rows(spark, tmp_path):
 
 
 def test_diff_wet_classifies_changes(spark, tmp_path):
-    from hbase_observer_es_spark.sinks.wet import diff_wet
+    from attic.sinks.wet import diff_wet
 
     base = write_wet(_docs(spark), str(tmp_path / "a"), 2, date_col="warc_date")
     # identical re-export: nothing to refresh

@@ -9,7 +9,7 @@ import struct
 
 import pytest
 
-from hbase_observer_es_spark.operators.xls_text import (
+from attic.operators.xls_text import (
     _rk_value,
     xls_meta,
     xls_to_text,
@@ -389,7 +389,7 @@ def test_malformed_structures_refuse_with_offsets():
 
 
 def test_census_reports_xls_chars():
-    from hbase_observer_es_spark.operators.media_census import classify_media
+    from attic.operators.media_census import classify_media
 
     wb = _xls([_sst(["census cell"])], [("S", [_labelsst(0, 0, 0)])])
     row = classify_media(wb, "t")
@@ -425,7 +425,7 @@ def test_biff5_label_grid_round_trip_property(cells):
     """r15 property: arbitrary LABEL grids through the test-side BIFF5
     encoder extract exactly the row-major tab-joined (then normalized)
     text the cell map dictates."""
-    from hbase_observer_es_spark.operators.office_text import _normalize
+    from attic.operators.office_text import _normalize
 
     recs = [_label5(rw, col, s) for rw, col, s in cells]
     wb = _book5([], [("S", recs)])

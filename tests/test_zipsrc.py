@@ -9,7 +9,7 @@ import zipfile
 
 import pytest
 
-from hbase_observer_es_spark.sources.zipsrc import (
+from attic.sources.zipsrc import (
     read_zip_members,
     zip_texts_to_documents,
 )
@@ -99,7 +99,7 @@ def test_member_size_guard(monkeypatch):
     """Guard check runs executor-side in Spark; here the walk is driven
     directly (monkeypatched module globals do not reach Spark's python
     worker processes)."""
-    import hbase_observer_es_spark.sources.zipsrc as zs
+    import attic.sources.zipsrc as zs
 
     monkeypatch.setattr(zs, "MAX_MEMBER_BYTES", 4)
     with pytest.raises(ValueError, match=r"over the 4 member guard"):
@@ -121,7 +121,7 @@ def test_zero_byte_members_skipped(spark, tmp_path):
 
 
 def test_member_glob_is_case_sensitive_everywhere():
-    from hbase_observer_es_spark.sources.zipsrc import _iter_members
+    from attic.sources.zipsrc import _iter_members
 
     payload = _zip_bytes({"README.TXT": "upper", "notes.txt": "lower"})
     names = [n for n, _ in _iter_members(payload, "t.zip", "*.txt")]
