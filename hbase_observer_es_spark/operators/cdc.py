@@ -28,7 +28,7 @@ reference's single global ReentrantLock buffer (ElasticsearchBulkOperator.java:4
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import table
@@ -67,20 +67,13 @@ def mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def latest_cell_state(mut: DataFrame) -> DataFrame:
-    """A5+A7: last-write-wins value per (row_key, qualifier), upserts only.
+    """A5+A7: last-write-wins value per (row_key, qualifier), upserts only —
+    ``resolve_cells`` over the upsert rows, so the same ts-then-value rank.
 
     Window dedup instead of the reference's arrival-order overwrite: deterministic
     under any partitioning, idempotent under log replay (property-tested).
     """
-    w = Window.partitionBy("row_key", "qualifier").orderBy(
-        F.desc("ts"), F.desc("value")
-    )
-    return (
-        mut.filter(F.col("op") == "upsert")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("row_key", "qualifier", "value", "ts")
-    )
+    return resolve_cells(mut.filter(F.col("op") == "upsert")).drop("op")
 
 
 def resolve_cells(

@@ -35,12 +35,11 @@ This module implements that as plain Catalyst column expressions:
   populations are handled by the range sampler (equal-ROWS output files,
   not equal key-space).
 
-``q_zorder_cells`` is the registration-ready fixture twin (lineitem,
+``q_zorder_cells`` is the registered fixture twin (lineitem,
 ``l_partkey`` × ``l_suppkey`` at 4 bits — 256 curve cells) with
 ``SQL_ZORDER_CELLS`` as its DuckDB mirror replaying the identical quantize
-and interleave arithmetic; held out of the registry until the verification
-window clears (the ``q_embed_pq`` discipline), hash-pinned by
-``tests/test_zorder.py``.
+and interleave arithmetic; the oracle sweep checks it, and
+``tests/test_zorder.py`` hash-pins it.
 
 Reference parity note: the reference (HBase→ES observer) has no layout
 optimizer — this is part of the beyond-reference training-data-pipeline

@@ -31,16 +31,15 @@ Semantics mapped to the reference:
   engine's timestamp type exactly (no sub-ms truncation surprises).
 * deletes — REST deletes are bodyless ``DELETE /table/row`` calls with no
   cell-set representation, exactly as ``postDelete`` carries only the row key
-  (:97-98). They arrive as a second NDJSON stream of
-  ``{"delete": "<base64 rowkey>", "timestamp": ms}`` objects (the natural log
-  form of the DELETE call), parsed by ``parse_deletes``.
+  (:97-98). They are logged as ``{"delete": "<base64 rowkey>", "timestamp":
+  ms}`` lines (the natural log form of the DELETE call), interleaved with the
+  cell-set lines in the same change log.
 
-Scale: both parsers are map-only projections over a text scan — no shuffle,
-no UDF; at 100 TB the JSON lines partition like any text source and the
-parse stays in whole-stage codegen. ``read_stream``-style streaming works
-unchanged: point ``spark.readStream.text`` at the log directory and apply the
-same ``parse_cellset``/``parse_deletes`` expressions (they are pure column
-transforms).
+``parse_change_log`` is the one parser. Scale: it is a map-only projection
+over a text scan — no shuffle, no UDF; at 100 TB the JSON lines partition like
+any text source and the parse stays in whole-stage codegen. Streaming works
+unchanged: point ``spark.readStream.text`` at the log directory and apply
+``parse_change_log`` (its expressions are pure column transforms).
 """
 
 from __future__ import annotations
@@ -52,7 +51,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CELL_SCHEMA = T.StructType(
+# one line of the change log: a cell-set document (``Row``) or a delete
+# (``delete`` + ``timestamp``); a line fills the fields of its own kind
+_MIXED_SCHEMA = T.StructType(
     [
         T.StructField(
             "Row",
@@ -75,12 +76,7 @@ CELL_SCHEMA = T.StructType(
                     ]
                 )
             ),
-        )
-    ]
-)
-
-DELETE_SCHEMA = T.StructType(
-    [
+        ),
         T.StructField("delete", T.StringType()),
         T.StructField("timestamp", T.LongType()),
     ]
@@ -95,9 +91,7 @@ def _upsert_struct(key, col, val, ts_ms):
     """THE single cell decode, as one mutation struct: base64 row key,
     first-colon family strip ('family:qualifier' → qualifier — family names
     cannot contain ':', qualifiers can, per CellUtil.cloneQualifier; family
-    dropped per SURVEY A5 / D4), base64 value, epoch-ms timestamp. Shared by
-    the relational (_upserts_of) and higher-order (parse_change_log) paths so
-    the two parsers can never decode the same wire bytes differently."""
+    dropped per SURVEY A5 / D4), base64 value, epoch-ms timestamp."""
     return F.struct(
         _b64_str(key).alias("row_key"),
         F.regexp_replace(_b64_str(col), "^[^:]*:", "").alias("qualifier"),
@@ -108,8 +102,8 @@ def _upsert_struct(key, col, val, ts_ms):
 
 
 def _delete_struct(key, ts_ms):
-    """Whole-row tombstone struct (qualifier/value NULL), same shared-decode
-    rationale as _upsert_struct."""
+    """Whole-row tombstone struct (qualifier/value NULL, the reference's
+    postDelete granularity)."""
     return F.struct(
         _b64_str(key).alias("row_key"),
         F.lit(None).cast("string").alias("qualifier"),
@@ -119,70 +113,13 @@ def _delete_struct(key, ts_ms):
     )
 
 
-def parse_cellset(lines: DataFrame, column: str = "value") -> DataFrame:
-    """NDJSON cell-set lines → upsert mutations (cdc.py contract). One line =
-    one cell-set document = one Put's cells (the coprocessor's per-RPC unit).
-
-    Malformed lines parse to NULL and are dropped — the eager-validation
-    posture of sources/config.py applies to CONFIG; a data stream at 100 TB
-    drops and counts instead of dying (count with a ``is_corrupt`` audit
-    column upstream if the pipeline needs the number).
-    """
-    parsed = lines.select(
-        F.from_json(F.col(column), CELL_SCHEMA).alias("doc")
-    ).filter(F.col("doc").isNotNull())
-    return _upserts_of(parsed)
-
-
-def _upserts_of(parsed: DataFrame) -> DataFrame:
-    """Parsed cell-set docs (``doc.Row``) → upsert mutations (decode rules in
-    _upsert_struct)."""
-    return (
-        parsed.filter(F.col("doc.Row").isNotNull())
-        .select(F.explode("doc.Row").alias("row"))
-        .select(F.col("row.key").alias("k"), F.explode("row.Cell").alias("cell"))
-        .select(
-            _upsert_struct(
-                F.col("k"),
-                F.col("cell.column"),
-                F.col("cell.`$`"),
-                F.col("cell.timestamp"),
-            ).alias("m")
-        )
-        .select("m.row_key", "m.qualifier", "m.value", "m.op", "m.ts")
-    )
-
-
-def _deletes_of(parsed: DataFrame) -> DataFrame:
-    """Parsed delete docs (``doc.delete``) → whole-row tombstone mutations."""
-    return (
-        parsed.filter(F.col("doc.delete").isNotNull())
-        .select(_delete_struct(F.col("doc.delete"), F.col("doc.timestamp")).alias("m"))
-        .select("m.row_key", "m.qualifier", "m.value", "m.op", "m.ts")
-    )
-
-
-def parse_deletes(lines: DataFrame, column: str = "value") -> DataFrame:
-    """NDJSON delete-log lines → delete mutations (whole-row tombstones, the
-    reference's postDelete granularity; qualifier/value NULL)."""
-    parsed = lines.select(
-        F.from_json(F.col(column), DELETE_SCHEMA).alias("doc")
-    ).filter(F.col("doc").isNotNull())
-    return _deletes_of(parsed)
-
-
-_MIXED_SCHEMA = T.StructType(
-    list(CELL_SCHEMA.fields) + list(DELETE_SCHEMA.fields)
-)
-
-
 _MUT_STRUCT = (
     "array<struct<row_key:string,qualifier:string,value:string,"
     "op:string,ts:timestamp>>"
 )
 
 
-def parse_change_log(lines: DataFrame, column: str = "value") -> DataFrame:
+def parse_change_log(lines: DataFrame) -> DataFrame:
     """A mixed NDJSON log (cell-set and delete lines interleaved, as a REST
     access log would record them) → the full mutation stream.
 
@@ -194,7 +131,7 @@ def parse_change_log(lines: DataFrame, column: str = "value") -> DataFrame:
     dominant cost and must happen once — pinned by the single-scan plan test.
     """
     parsed = lines.select(
-        F.from_json(F.col(column), _MIXED_SCHEMA).alias("doc")
+        F.from_json(F.col("value"), _MIXED_SCHEMA).alias("doc")
     ).filter(F.col("doc").isNotNull())
     upsert_muts = F.flatten(
         F.transform(
@@ -221,7 +158,7 @@ def parse_change_log(lines: DataFrame, column: str = "value") -> DataFrame:
 
 def encode_cellset(row_key: str, cells: list[tuple[str, str, int]]) -> str:
     """One Put as a cell-set JSON line: cells = [(family:qualifier, value,
-    ts_ms)]. Driver-side fixture builder — the inverse of parse_cellset, used
+    ts_ms)]. Driver-side fixture builder — the inverse of parse_change_log, used
     by tests to golden-check the decode without an HBase to talk to."""
     b64 = lambda s: base64.b64encode(s.encode()).decode()  # noqa: E731
     return json.dumps(

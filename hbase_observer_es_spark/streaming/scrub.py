@@ -18,55 +18,26 @@ source drains — which is what the oracle checks.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import table
 from ..operators.pii import SQL_TEXT_PII, pii_per_doc, pii_report
-from ..sources.filestream import (
-    read_stream,
-    scratch_dir,
-    source_fingerprint,
-    stage_cached,
-)
-from .stateful import (
-    N_BATCHES,
-    _drain_memory_sink,
-    _record_stream_plan,
-    _streaming_session,
-)
+from ..sources.filestream import source_fingerprint
+from .stateful import _run_stream
 
 
 def s_pii_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the PII audit over a real document stream (micro-batch replay of
     the corpus), complete output mode; equals batch q_text_pii when drained."""
-    run = f"s_pii_stream_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    d = table(spark, sf_dir, "documents")
-    stream_dir = stage_cached(
-        d,
+    return _run_stream(
+        spark,
+        "s_pii_stream",
+        table(spark, sf_dir, "documents"),
         "docs-" + source_fingerprint(sf_dir, "documents"),
-        run_dir,
-        N_BATCHES,
+        lambda s: pii_report(pii_per_doc(s)),
+        mode="complete",
         order_col="doc_id",  # documents carry no timestamp; id order is the arrival order
     )
-    sub = _streaming_session(spark)
-    stream = read_stream(sub, stream_dir, d.schema)
-    audit = pii_report(pii_per_doc(stream))
-    qname = f"piistream_{uuid.uuid4().hex[:8]}"
-    q = (
-        audit.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_pii_stream", q)
-    return _drain_memory_sink(sub, qname, sub.table(qname), run_dir)
 
 
 # drained stream == the batch scrub; the oracle is the SAME audit SQL

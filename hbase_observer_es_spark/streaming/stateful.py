@@ -26,6 +26,10 @@ exchange on the row key feeding two windows — no join; a few partitions per ba
 fold their runs into a new base (Delta/Hudi merge-on-read in production). No
 driver state, no global lock — the partition parallelism the reference's single
 ReentrantLock buffer (ElasticsearchBulkOperator.java:47) cannot have.
+
+Every stream query here (and streaming/scrub.py's) runs through ``_run_stream``,
+the one place a stream is staged, started and drained; each query supplies only
+its source, transform and the settings that differ.
 """
 
 from __future__ import annotations
@@ -40,6 +44,7 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import dsum
 from ..operators.cdc import SQL_CDC_TOMBSTONE, mutations
 from ..session import apply_runtime_conf
 from ..sinks.keyed_parquet import KeyedParquetSink
@@ -102,9 +107,8 @@ def _streaming_session(
     docstrings); same isolation argument.
 
     Clones are reused from the pool (same SparkContext + same overrides →
-    same clone), and the memory-sink queries unpin their result tables via
-    ``_drain_memory_sink``, so repeated invocations hold no growing session
-    or catalog state.
+    same clone), and ``_run_stream`` unpins each memory-sink result table,
+    so repeated invocations hold no growing session or catalog state.
     """
     key = (spark.sparkContext.applicationId, n, bool(nodata))
     sub = _SESSION_POOL.get(key)
@@ -121,20 +125,115 @@ def _streaming_session(
     return sub
 
 
-def _drain_memory_sink(
-    sub: SparkSession, qname: str, df: DataFrame, run_dir: str
-) -> DataFrame:
-    """Materialize a memory-sink query's FINAL result and unpin the sink
-    table: an eager localCheckpoint copies the (result-sized) rows into
-    block storage whose lifetime is the RETURNED frame's, after which the
-    temp view is dropped — nothing stays pinned in the pooled clone's
-    catalog between invocations. Without this, every run would leave its
-    full result table reachable only through that run's return value while
-    the catalog reference kept it alive for the driver's lifetime.
+def _append_sentinel(stream_dir: str) -> None:
+    """Append a far-future sentinel event TO THE LAST staged batch file (not a
+    batch of its own).
 
-    The query has terminated and the copy no longer reads its run
-    directory (staged input + checkpoint), so that is removed too."""
-    out = df.localCheckpoint(eager=True)
+    The watermark advances after the batch that contains the sentinel; the
+    final no-data micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``,
+    on by default) then emits every closed window. Folding the sentinel into the
+    last data batch saves one full state-commit cycle per query versus shipping
+    it as its own micro-batch — at fixture scale that fixed cost dominates.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    last = sorted(glob.glob(os.path.join(stream_dir, "batch-*.parquet")))[-1]
+    mtime = os.stat(last).st_mtime
+    # append driver-side with pyarrow: one row into an existing file — going
+    # through a Spark job here would rewrite the whole batch through a single
+    # task (measured ~2s/query at sf0.1 for a 1-row append)
+    tbl = pq.read_table(last)
+    # batches are globally ts-sorted (stage_ordered_batches), so the last row
+    # of the last batch IS max(ts) — no Spark scan needed for it either
+    max_ts = tbl.column("ts")[-1].as_py()
+    sent_vals = {
+        "event_id": -1,
+        "ts": max_ts + datetime.timedelta(days=10),
+        "user_id": -1,
+        "event_type": "sentinel",
+        "value": 0.0,
+        "props": "{}",
+    }
+    sentinel = pa.Table.from_pydict(
+        {f.name: pa.array([sent_vals[f.name]], type=f.type) for f in tbl.schema},
+        schema=tbl.schema,
+    )
+    # int96 timestamps to match the Spark-written sibling batches — Spark's
+    # streaming parquet reader rejects arrow's default INT64-nanos encoding
+    pq.write_table(
+        pa.concat_tables([tbl, sentinel]), last, use_deprecated_int96_timestamps=True
+    )
+    os.utime(last, (mtime, mtime))
+
+
+def _events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
+    """The events table and its staging cache key: every query streaming the
+    table unchanged shares one staging."""
+    return table(spark, sf_dir, "events"), source_fingerprint(sf_dir, "events")
+
+
+def _run_stream(
+    spark: SparkSession,
+    name: str,
+    source: DataFrame,
+    cache_key: str,
+    transform=lambda stream: stream,
+    *,
+    mode: str = "append",
+    partitions: int = STATE_PARTITIONS,
+    nodata: bool = True,
+    order_col: str = "ts",
+    sentinel: bool = False,
+    finish=lambda result: result,
+    keyed_sink: bool = False,
+) -> DataFrame:
+    """Run one stream query to completion and return ``finish`` of its result.
+
+    ``source`` is staged as N_BATCHES ordered files under a fresh run
+    directory ``.scratch/<name>_<uuid>`` (``stage_cached``; ``cache_key`` must
+    identify the source's content, ``order_col`` is the arrival order, and
+    ``sentinel`` appends the far-future event), read back as a stream on the
+    isolated session, ``transform``-ed, and run with a checkpoint under the
+    run directory and an ``availableNow`` trigger. The final plan goes to
+    ``_record_stream_plan`` under ``name``.
+
+    The result goes to a memory sink in ``mode``. Once drained, an eager
+    localCheckpoint copies the (result-sized) rows into block storage whose
+    lifetime is the RETURNED frame's, the sink's temp view is dropped and the
+    run directory is removed: nothing stays pinned in the pooled clone's
+    catalog or on disk between invocations.
+
+    With ``keyed_sink``, each micro-batch is merged instead into a
+    ``KeyedParquetSink`` in the run directory. Its lazy read scans the index
+    files there, so the directory lives exactly as long as the returned frame
+    object: keep that object referenced while any frame derived from it is
+    evaluated.
+    """
+    run_dir = scratch_dir(f"{name}_{uuid.uuid4().hex[:8]}")
+    stream_dir = stage_cached(source, cache_key, run_dir, N_BATCHES, order_col)
+    if sentinel:
+        _append_sentinel(stream_dir)
+    sub = _streaming_session(spark, partitions, nodata)
+    writer = transform(read_stream(sub, stream_dir, source.schema)).writeStream
+    qname = os.path.basename(run_dir)
+    if keyed_sink:
+        sink = KeyedParquetSink(run_dir)
+        writer = writer.foreachBatch(sink.merge_batch)
+    else:
+        writer = writer.format("memory").queryName(qname).outputMode(mode)
+    q = (
+        writer.option("checkpointLocation", os.path.join(run_dir, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    _record_stream_plan(name, q)
+    if keyed_sink:
+        out = finish(sink.read(spark))
+        weakref.finalize(out, shutil.rmtree, run_dir, ignore_errors=True)
+        return out
+    out = finish(sub.table(qname)).localCheckpoint(eager=True)
     sub.catalog.dropTempView(qname)
     shutil.rmtree(run_dir)
     return out
@@ -150,40 +249,26 @@ def s_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bench note (r10 re-measure, quiet host, warm): staging 0.08 s, session
     clone 0.002 s (POOLED — per-query clone cost is not the r9 mover),
-    stream 1.15 s, drain 0.33 s. The r8→r9 delta is the
-    ``_drain_memory_sink`` eager localCheckpoint — a result-sized copy that
-    buys the unpinned-catalog invariant; at scale the result goes to a real
-    sink and the copy disappears with the memory sink itself.
-    """
-    run = f"s_watermark_dedup_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    doubled = e.unionByName(e)
-    stream_dir = stage_cached(doubled, "2x-" + source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
+    stream 1.15 s, drain 0.33 s. The r8→r9 delta is the drain's eager
+    localCheckpoint — a result-sized copy that buys the unpinned-catalog
+    invariant; at scale the result goes to a real sink and the copy
+    disappears with the memory sink itself.
 
-    # no-data batch off (r16): streaming dropDuplicates EMITS each kept row in
-    # the micro-batch it arrives in (append semantics); the trailing no-data
-    # batch only advances the watermark for state EVICTION, which after the
-    # final availableNow batch is pure commit-cycle overhead — measured
-    # ~0.35 s/query at sf0.1, output rows identical (oracle re-checked).
-    sub = _streaming_session(spark, nodata=False)
-    stream = read_stream(sub, stream_dir, e.schema)
-    deduped = stream.withWatermark("ts", "90 days").dropDuplicates(["event_id"])
-    qname = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    No-data batch off (r16): streaming dropDuplicates EMITS each kept row in
+    the micro-batch it arrives in (append semantics); the trailing no-data
+    batch only advances the watermark for state EVICTION, which after the
+    final availableNow batch is pure commit-cycle overhead — measured
+    ~0.35 s/query at sf0.1, output rows identical (oracle re-checked).
+    """
+    e, key = _events(spark, sf_dir)
+    return _run_stream(
+        spark,
+        "s_watermark_dedup",
+        e.unionByName(e),
+        "2x-" + key,
+        lambda s: s.withWatermark("ts", "90 days").dropDuplicates(["event_id"]),
+        nodata=False,
     )
-    q.awaitTermination()
-    _record_stream_plan("s_watermark_dedup", q)
-    out = sub.table(qname).select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_WATERMARK_DEDUP = """
@@ -195,28 +280,13 @@ def s_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference pipeline end-to-end, streaming: mutation log → micro-batches →
     foreachBatch LWW merge with tombstones into a keyed parquet sink. Final state
     must equal the batch q_cdc_tombstone snapshot (same oracle)."""
-    run = f"s_upsert_sink_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    mut = mutations(spark, sf_dir)
-    stream_dir = stage_cached(mut, "mut-" + source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
-
-    sink = KeyedParquetSink(run_dir)
-    sub = _streaming_session(spark)
-    stream = read_stream(sub, stream_dir, mut.schema)
-    q = (
-        stream.writeStream.foreachBatch(sink.merge_batch)
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    return _run_stream(
+        spark,
+        "s_upsert_sink",
+        mutations(spark, sf_dir),
+        "mut-" + source_fingerprint(sf_dir, "events"),
+        keyed_sink=True,
     )
-    q.awaitTermination()
-    _record_stream_plan("s_upsert_sink", q)
-    out = sink.read(spark).select("row_key", "qualifier", "value", "ts")
-    # the lazy read scans the index files under run_dir, so the directory
-    # lives exactly as long as the returned frame object: keep that object
-    # referenced while any frame derived from it is evaluated
-    weakref.finalize(out, shutil.rmtree, run_dir, ignore_errors=True)
-    return out
 
 
 # the streaming sink must converge to exactly the batch tombstone snapshot
@@ -300,40 +370,33 @@ def s_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    run = f"s_stateful_profile_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
+    def profiled(stream: DataFrame) -> DataFrame:
+        return stream.groupBy("user_id").applyInPandasWithState(
+            _profile_update,
+            outputStructType=_PROFILE_OUT,
+            stateStructType=_PROFILE_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
 
-    # no-data batch off: see docstring — NoTimeout => pure overhead
-    sub = _streaming_session(spark, PROFILE_STATE_PARTITIONS, nodata=False)
-    stream = read_stream(sub, stream_dir, e.schema)
-    profiled = stream.groupBy("user_id").applyInPandasWithState(
-        _profile_update,
-        outputStructType=_PROFILE_OUT,
-        stateStructType=_PROFILE_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    def last_emission(emitted: DataFrame) -> DataFrame:
+        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+        return (
+            emitted.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("user_id", "n_events", "vmin", "vmax", "last_ts")
+        )
+
+    return _run_stream(
+        spark,
+        "s_stateful_profile",
+        *_events(spark, sf_dir),
+        profiled,
+        mode="update",
+        partitions=PROFILE_STATE_PARTITIONS,
+        nodata=False,
+        finish=last_emission,
     )
-    qname = f"profile_{uuid.uuid4().hex[:8]}"
-    q = (
-        profiled.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_stateful_profile", q)
-    emitted = sub.table(qname)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    out = (
-        emitted.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "n_events", "vmin", "vmax", "last_ts")
-    )
-    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_STATEFUL_PROFILE = """
@@ -352,50 +415,6 @@ GROUP BY user_id
 # ---------------------------------------------------------------------------
 
 
-def _stage_with_sentinel(e: DataFrame, sf_dir: str, out: str) -> str:
-    """Stage the events table as micro-batches with a far-future sentinel event
-    APPENDED TO THE LAST batch file (not a batch of its own).
-
-    The watermark advances after the batch that contains the sentinel; the
-    final no-data micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``,
-    on by default) then emits every closed window. Folding the sentinel into the
-    last data batch saves one full state-commit cycle per query versus shipping
-    it as its own micro-batch — at fixture scale that fixed cost dominates.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), out, N_BATCHES)
-    last = sorted(glob.glob(os.path.join(stream_dir, "batch-*.parquet")))[-1]
-    mtime = os.stat(last).st_mtime
-    # append driver-side with pyarrow: one row into an existing file — going
-    # through a Spark job here would rewrite the whole batch through a single
-    # task (measured ~2s/query at sf0.1 for a 1-row append)
-    tbl = pq.read_table(last)
-    # batches are globally ts-sorted (stage_ordered_batches), so the last row
-    # of the last batch IS max(ts) — no Spark scan needed for it either
-    max_ts = tbl.column("ts")[-1].as_py()
-    sent_vals = {
-        "event_id": -1,
-        "ts": max_ts + datetime.timedelta(days=10),
-        "user_id": -1,
-        "event_type": "sentinel",
-        "value": 0.0,
-        "props": "{}",
-    }
-    sentinel = pa.Table.from_pydict(
-        {f.name: pa.array([sent_vals[f.name]], type=f.type) for f in tbl.schema},
-        schema=tbl.schema,
-    )
-    # int96 timestamps to match the Spark-written sibling batches — Spark's
-    # streaming parquet reader rejects arrow's default INT64-nanos encoding
-    pq.write_table(
-        pa.concat_tables([tbl, sentinel]), last, use_deprecated_int96_timestamps=True
-    )
-    os.utime(last, (mtime, mtime))
-    return stream_dir
-
-
 def s_win_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window aggregation over a REAL stream, append mode.
 
@@ -410,40 +429,29 @@ def s_win_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one row per (window, event_type); the watermark bounds it —
     windows older than the lateness horizon are evicted on emission.
     """
-    from ..functions import dsum
 
-    run = f"s_win_stream_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    stream_dir = _stage_with_sentinel(e, sf_dir, run_dir)
-
-    sub = _streaming_session(spark)
-    stream = read_stream(sub, stream_dir, e.schema)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
-        .select(
-            F.col("w.start").alias("win_start"),
-            F.col("w.end").alias("win_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
+    def windowed(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+            .select(
+                F.col("w.start").alias("win_start"),
+                F.col("w.end").alias("win_end"),
+                "event_type",
+                "n_events",
+                "sum_value",
+            )
         )
+
+    return _run_stream(
+        spark,
+        "s_win_stream",
+        *_events(spark, sf_dir),
+        windowed,
+        sentinel=True,
+        finish=lambda t: t.filter(F.col("event_type") != "sentinel"),
     )
-    qname = f"winstream_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_win_stream", q)
-    out = sub.table(qname).filter(F.col("event_type") != "sentinel")
-    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 # append-mode stream must converge to exactly the batch tumbling-window result
@@ -464,40 +472,29 @@ def s_session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and evicted when the watermark passes a session's close — the bounded-state
     form of per-entity sessionization at 100 TB/day.
     """
-    from ..functions import dsum
 
-    run = f"s_session_stream_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    stream_dir = _stage_with_sentinel(e, sf_dir, run_dir)
-
-    sub = _streaming_session(spark)
-    stream = read_stream(sub, stream_dir, e.schema)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("sess_start"),
-            F.col("w.end").alias("sess_end"),
-            "n_events",
-            "sum_value",
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
+            .select(
+                "user_id",
+                F.col("w.start").alias("sess_start"),
+                F.col("w.end").alias("sess_end"),
+                "n_events",
+                "sum_value",
+            )
         )
+
+    return _run_stream(
+        spark,
+        "s_session_stream",
+        *_events(spark, sf_dir),
+        sessions,
+        sentinel=True,
+        finish=lambda t: t.filter(F.col("user_id") != -1),
     )
-    qname = f"sessstream_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_session_stream", q)
-    out = sub.table(qname).filter(F.col("user_id") != -1)
-    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 from .windows import SQL_WIN_SESSION as SQL_SESSION_STREAM  # noqa: E402
@@ -527,47 +524,35 @@ def s_join_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark for state EVICTION and outer-join null emission, and can
     contribute no inner-join output rows.
     """
-    run = f"s_join_stream_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
 
-    # no-data batch off: see docstring — inner join emits on arrival
-    sub = _streaming_session(spark, nodata=False)
-    s = read_stream(sub, stream_dir, e.schema).withWatermark("ts", "1 hour")
-    a = s.select(
-        F.col("user_id"),
-        F.col("event_id").alias("a_id"),
-        F.col("ts").alias("a_ts"),
+    def joined(stream: DataFrame) -> DataFrame:
+        s = stream.withWatermark("ts", "1 hour")
+        a = s.select(
+            F.col("user_id"),
+            F.col("event_id").alias("a_id"),
+            F.col("ts").alias("a_ts"),
+        )
+        b = s.select(
+            F.col("user_id").alias("b_user"),
+            F.col("event_id").alias("b_id"),
+            F.col("ts").alias("b_ts"),
+        )
+        return a.join(
+            b,
+            (a.user_id == b.b_user)
+            & (F.col("b_ts") > F.col("a_ts"))
+            & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
+        ).select(
+            "user_id",
+            "a_id",
+            "b_id",
+            (F.unix_micros("b_ts") - F.unix_micros("a_ts")).alias("gap_us"),
+        )
+
+    # no-data batch off: inner join emits on arrival, see docstring
+    return _run_stream(
+        spark, "s_join_stream", *_events(spark, sf_dir), joined, nodata=False
     )
-    b = s.select(
-        F.col("user_id").alias("b_user"),
-        F.col("event_id").alias("b_id"),
-        F.col("ts").alias("b_ts"),
-    )
-    joined = a.join(
-        b,
-        (a.user_id == b.b_user)
-        & (F.col("b_ts") > F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
-    ).select(
-        "user_id",
-        "a_id",
-        "b_id",
-        (F.unix_micros("b_ts") - F.unix_micros("a_ts")).alias("gap_us"),
-    )
-    qname = f"joinstream_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_join_stream", q)
-    return _drain_memory_sink(sub, qname, sub.table(qname), run_dir)
 
 
 from ..operators.relational import SQL_JOIN_RANGE as SQL_JOIN_STREAM  # noqa: E402
@@ -590,35 +575,18 @@ def s_terms_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per term) — the state and the re-emitted sink are term-cardinality-sized,
     never row-sized. A row-scale complete-mode sink would be a scale bug.
     """
-    from ..functions import dsum
-
-    run = f"s_terms_stream_{uuid.uuid4().hex[:8]}"
-    run_dir = scratch_dir(run)
-    e = table(spark, sf_dir, "events")
-    stream_dir = stage_cached(e, source_fingerprint(sf_dir, "events"), run_dir, N_BATCHES)
-
-    sub = _streaming_session(spark)
-    stream = read_stream(sub, stream_dir, e.schema)
-    agg = stream.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
+    return _run_stream(
+        spark,
+        "s_terms_stream",
+        *_events(spark, sf_dir),
+        lambda s: s.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
+        ),
+        mode="complete",
+        finish=lambda t: t.orderBy(F.desc("n_events"), F.asc("event_type")).limit(
+            TERMS_STREAM_N
+        ),
     )
-    qname = f"termsstream_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(run_dir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _record_stream_plan("s_terms_stream", q)
-    out = (
-        sub.table(qname)
-        .orderBy(F.desc("n_events"), F.asc("event_type"))
-        .limit(TERMS_STREAM_N)
-    )
-    return _drain_memory_sink(sub, qname, out, run_dir)
 
 
 SQL_TERMS_STREAM = f"""

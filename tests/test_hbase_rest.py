@@ -10,9 +10,7 @@ import json
 from hbase_observer_es_spark.sources.hbase_rest import (
     encode_cellset,
     encode_delete,
-    parse_cellset,
     parse_change_log,
-    parse_deletes,
 )
 
 
@@ -28,7 +26,7 @@ def test_cellset_decodes_to_mutations(spark):
         [("cf:click", "7", 1704067200000), ("meta:view", "3", 1704067200001)],
     )
     rows = sorted(
-        parse_cellset(_lines(spark, [line])).collect(), key=lambda r: r.qualifier
+        parse_change_log(_lines(spark, [line])).collect(), key=lambda r: r.qualifier
     )
     assert [(r.row_key, r.qualifier, r.value, r.op) for r in rows] == [
         ("user42", "click", "7", "upsert"),
@@ -43,7 +41,7 @@ def test_qualifier_with_colon_keeps_tail(spark):
     itself contain colons (CellUtil.cloneQualifier), so 'cf:a:b' decodes to
     qualifier 'a:b', not 'b'."""
     line = encode_cellset("k", [("cf:a:b", "v", 1)])
-    (row,) = parse_cellset(_lines(spark, [line])).collect()
+    (row,) = parse_change_log(_lines(spark, [line])).collect()
     assert row.qualifier == "a:b"
 
 
@@ -55,8 +53,8 @@ def test_delete_log_and_mixed_stream(spark):
     assert ops == {"upsert", "delete"}
     d = next(r for r in muts if r.op == "delete")
     assert d.row_key == "k1" and d.qualifier is None and d.value is None
-    # the standalone delete-log parser agrees with the mixed-log path
-    (d2,) = parse_deletes(_lines(spark, [de])).collect()
+    # a delete-only log parses to the same tombstone as the mixed log
+    (d2,) = parse_change_log(_lines(spark, [de])).collect()
     assert (d2.row_key, d2.op, d2.ts) == (d.row_key, d.op, d.ts)
 
 
@@ -80,7 +78,7 @@ def test_wire_to_wire_rest_in_bulk_out(spark):
     line = encode_cellset(
         "row9", [("cf:click", "1", 5000), ("cf:view", "2", 5000)]
     )
-    actions = bulk_actions(parse_cellset(_lines(spark, [line])), index="obs")
+    actions = bulk_actions(parse_change_log(_lines(spark, [line])), index="obs")
     (r,) = actions.collect()
     meta, doc = (json.loads(ln) for ln in r.action.split("\n"))
     assert meta == {"update": {"_index": "obs", "_id": "row9"}}
@@ -90,7 +88,7 @@ def test_wire_to_wire_rest_in_bulk_out(spark):
 def test_parse_is_map_only_no_shuffle(spark):
     """Scale posture: the parse plan is scan → project/generate only — no
     exchange, no Python stage (the module docstring's 100 TB claim)."""
-    df = parse_cellset(_lines(spark, [encode_cellset("k", [("cf:q", "v", 1)])]))
+    df = parse_change_log(_lines(spark, [encode_cellset("k", [("cf:q", "v", 1)])]))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "Python" not in plan, plan

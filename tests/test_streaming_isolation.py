@@ -71,6 +71,26 @@ def test_streaming_modules_never_set_conf_on_caller_session():
             )
 
 
+def test_streaming_queries_start_streams_only_through_the_runner():
+    """Every stream query is staged, started and drained by one harness:
+    `.writeStream` appears in the streaming modules only inside
+    `stateful._run_stream`. A query that builds its own writer names itself
+    here (by its top-level function)."""
+    from hbase_observer_es_spark.streaming import scrub, stateful, windows
+
+    owners = set()
+    for module in (stateful, scrub, windows):
+        for top in ast.parse(inspect.getsource(module)).body:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                    where = getattr(top, "name", "<module>")
+                    owners.add(f"{module.__name__.rsplit('.', 1)[-1]}.{where}")
+    assert owners <= {"stateful._run_stream"}, (
+        "writeStream outside the runner in: "
+        f"{sorted(owners - {'stateful._run_stream'})}"
+    )
+
+
 def test_streaming_run_leaves_caller_conf_untouched(spark):
     """Behavioral twin: run the query that needs BOTH overrides (shuffle width
     AND no-data-batch off — s_join_stream) and one plain streaming query, and
